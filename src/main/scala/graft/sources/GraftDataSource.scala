@@ -76,7 +76,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * vectors or not — decodes through Spark's own vectorized parquet
   * reader as [[org.apache.spark.sql.vectorized.ColumnarBatch]]es
   * ([[GraftColumnarPartitionReader]]) at the same per-byte cost as
-  * `spark.read.parquet` under [[ManagedTable.read]], so the connector
+  * the v1 parquet scan under [[ManagedTable.read]], so the connector
   * IS a first-class bulk-scan path. DV'd files apply their tombstones
   * INSIDE the vectorized reader through a zero-copy per-batch
   * selection view ([[GraftSelectionColumnVector]]) — a 100 TB table
@@ -225,7 +225,7 @@ private[graft] object GraftTableMeta {
       ManagedTable.readManifest(spark, dir, v)
     val (files, dvFiles) = ManagedTable.splitDv(all)
     // parquet scans always surface nullable columns — every other
-    // read path (spark.read.parquet under ManagedTable.read) does the
+    // read path (the v1 parquet scan under ManagedTable.read) does the
     // same, and readers of an evolved table genuinely can see nulls
     // in columns a pre-evolution segment lacks
     val schema = StructType(schemaJson.map(ManagedTable.schemaOf)
@@ -3019,8 +3019,7 @@ private[sources] class GraftBatchWrite(dir: String, schema: StructType,
       val cs = ManagedTable.constraintsOf(headProps)
       if (cs.nonEmpty && newFiles.nonEmpty)
         ManagedTable.enforceConstraints(
-          spark.read.schema(schema)
-            .parquet(newFiles.map(p => s"$dir/$p"): _*),
+          ManagedTable.scanFiles(spark, dir, newFiles, schema),
           headProps, "INSERT OVERWRITE")
     } else
       ManagedTable.enforceConstraintsOnFiles(spark, dir, newFiles,
@@ -3418,7 +3417,7 @@ private[sources] class GraftDataWriter(dir: String, segment: String,
 /** Spark StructType → parquet MessageType in Spark's own non-legacy
   * layout (standard logical annotations; 3-level "list"/"element"
   * lists), so segments written here are byte-compatible with both the
-  * vectorized `spark.read.parquet` under [[ManagedTable.read]] and
+  * vectorized v1 parquet scan under [[ManagedTable.read]] and
   * the connector's Group reader.
   */
 private[sources] object GraftParquetSchema {

@@ -255,9 +255,7 @@ private[sources] object GraftProcedures {
           _.keys.exists(_.startsWith(BloomSkipping.StatPrefix))))
         val tomb: Map[String, Long] =
           if (digested.isEmpty || dvFiles.isEmpty) Map.empty
-          else ManagedTable.dvRows(spark, dir, dvFiles)
-            .groupBy("__file").count()
-            .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+          else ManagedTable.dvCounts(spark, dir, dvFiles)
         val staleFracs = digested.flatMap { f =>
           val t = tomb.getOrElse(f, 0L)
           if (t == 0L) None

@@ -41,7 +41,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * the data tree — the object-store listing cost Delta removes), range
   * probes open only stats-matching files, and overwrite never touches
   * old segments, so concurrent readers of v N−1 are unaffected by the
-  * v N writer.
+  * v N writer. Every scan of manifest-listed or staged files goes
+  * through [[scanFiles]]: one `getFileStatus` per listed file on the
+  * driver, the manifest's schema, and no listing job, glob or footer
+  * inference.
   */
 object ManagedTable {
 
@@ -358,8 +361,8 @@ object ManagedTable {
     if (constraintsOf(props).isEmpty) return
     val schema = schemaJson.map(schemaOf).getOrElse(return)
     val written = relogical(
-      spark.read.schema(ColumnMapping.physSchema(schema))
-        .parquet(relFiles.map(p => s"$dir/$p"): _*), schema)
+      scanFiles(spark, dir, relFiles, ColumnMapping.physSchema(schema)),
+      schema)
     enforceConstraints(written, props, op)
   }
 
@@ -1167,7 +1170,8 @@ object ManagedTable {
     }
 
   /** Read a version (default: latest). Only manifest-listed files are
-    * read — never a directory listing of `data/` — and the scan uses
+    * read — never a directory listing of `data/`, and no Spark job runs
+    * to build the frame ([[scanFiles]]) — and the scan uses
     * the MANIFEST's recorded schema, not footer inference: a version
     * whose older segments predate a schema evolution (see [[merge]])
     * gets the missing columns null-filled deterministically (inference
@@ -1204,11 +1208,48 @@ object ManagedTable {
       substring_index(col("_metadata.file_path"), "/data/", -1))
   }
 
-  /** The (file, pos) rows of a version's deletion vector. */
+  /** A parquet scan of exactly `relFiles` (relative to `dir`) under the
+    * given PHYSICAL `schema` — the one primitive every read of
+    * manifest-listed or staged files goes through. The file list comes
+    * from the caller, not from storage: one driver-side `getFileStatus`
+    * per file on the same FileSystem handle [[readManifest]] uses, and
+    * no Spark job, glob or footer inference (`spark.read.parquet` over
+    * more than 32 paths runs a listing job, and without a schema a
+    * footer-inference job). The schema is made nullable exactly as
+    * `spark.read.schema(s)` does, the relation keeps the v1 vectorized
+    * reader and `_metadata.file_path`/`row_index`, and equal file lists
+    * give equal plans, so `cache()` on one read is hit by the next. A
+    * listed file missing on disk fails here — it never drops rows.
+    */
+  private[sources] def scanFiles(spark: SparkSession, dir: String,
+      relFiles: Seq[String],
+      schema: org.apache.spark.sql.types.StructType): DataFrame = {
+    val f = fs(spark, dir)
+    val index = new ManifestFileIndex(
+      relFiles.map(p => f.getFileStatus(new Path(s"$dir/$p"))))
+    spark.baseRelationToDataFrame(
+      org.apache.spark.sql.execution.datasources.HadoopFsRelation(index,
+        org.apache.spark.sql.types.StructType(Nil),
+        org.apache.spark.sql.graftshim.ColumnBridge.asNullable(schema),
+        None,
+        new org.apache.spark.sql.execution.datasources.parquet
+          .ParquetFileFormat(),
+        Map.empty)(spark))
+  }
+
+  /** The fixed layout of a deletion-vector segment. */
+  private val DvSchema = org.apache.spark.sql.types.StructType(Seq(
+    org.apache.spark.sql.types.StructField("__file",
+      org.apache.spark.sql.types.StringType),
+    org.apache.spark.sql.types.StructField("__pos",
+      org.apache.spark.sql.types.LongType)))
+
+  /** The (file, pos) rows of a version's deletion vector, read under
+    * the fixed DV schema (no footer inference).
+    */
   private[sources] def dvRows(spark: SparkSession, dir: String,
       dvFiles: Seq[String]): DataFrame =
-    spark.read.parquet(dvFiles.map(p => s"$dir/$p"): _*)
-      .select("__file", "__pos")
+    scanFiles(spark, dir, dvFiles, DvSchema)
 
   /** Per-file TOMBSTONE COUNTS of a version's deletion vector — the
     * only DV fact planning ever needs on the driver (live-row math,
@@ -1225,10 +1266,11 @@ object ManagedTable {
 
   /** Scan `files` under the recorded `schema`, minus any rows the
     * deletion vector lists — the DV-aware primitive every read path
-    * routes through. Zero overhead when `dvFiles` is empty; otherwise
-    * one anti-join keyed (relative file, row position), where the DV
-    * side is deleted-rows-sized (broadcast by Spark's own size
-    * heuristics when small — the common case).
+    * routes through. Both sides are [[scanFiles]] scans, so building
+    * the frame lists nothing and runs no job. Zero overhead when
+    * `dvFiles` is empty; otherwise one anti-join keyed (relative file,
+    * row position), where the DV side is deleted-rows-sized (broadcast
+    * by Spark's own size heuristics when small — the common case).
     */
   private def scanMinusDv(spark: SparkSession, dir: String,
       files: Seq[String], schema: org.apache.spark.sql.types.StructType,
@@ -1238,7 +1280,7 @@ object ManagedTable {
     // until a rename/drop activates mapping — see [[ColumnMapping]]);
     // the scan reads physical and re-projects to logical at the end
     val physS = ColumnMapping.physSchema(schema)
-    val base = spark.read.schema(physS).parquet(files.map(p => s"$dir/$p"): _*)
+    val base = scanFiles(spark, dir, files, physS)
     val deDv =
       if (dvFiles.isEmpty) base
       else base
@@ -1263,6 +1305,60 @@ object ManagedTable {
       col(ColumnMapping.phys(f)).as(f.name)) ++ aux.map(col): _*)
   }
 
+  /** The LIVE rows of `files` under logical names, each tagged with its
+    * (`__file`, `__pos`) identity — the row image the DML paths
+    * evaluate predicates on. `_metadata` is tagged ON the scan, before
+    * the DV anti-join (metadata columns don't resolve through derived
+    * plans).
+    */
+  private def taggedLive(spark: SparkSession, dir: String,
+      files: Seq[String], schema: org.apache.spark.sql.types.StructType,
+      dvFiles: Seq[String]): DataFrame = {
+    import org.apache.spark.sql.functions.col
+    val tagged = scanFiles(spark, dir, files, ColumnMapping.physSchema(schema))
+      .withColumn("__file", relPathCol)
+      .withColumn("__pos", col("_metadata.row_index"))
+    val live =
+      if (dvFiles.isEmpty) tagged
+      else tagged.join(dvRows(spark, dir, dvFiles),
+        Seq("__file", "__pos"), "left_anti")
+    relogical(live, schema, Seq("__file", "__pos"))
+  }
+
+  /** The tombstone side of a [[replaceWhere]]-shaped commit: the union
+    * of the live DV and the (`__file`, `__pos`) of every live row of
+    * `files` matching `predicate`, written as one DV segment of version
+    * `next` — or nothing when that union is empty. Zone-map pruned like
+    * [[deleteWhere]]: only files whose recorded stats can hold a
+    * matching row are opened; pruning all of them proves the fresh
+    * tombstone set empty without any scan (old DV entries, if any,
+    * still consolidate — identical manifest to the unpruned path).
+    */
+  private def tombstoneSegment(spark: SparkSession, dir: String,
+      files: Seq[String], stats: FileStats,
+      schema: org.apache.spark.sql.types.StructType, dvFiles: Seq[String],
+      predicate: org.apache.spark.sql.Column, next: Int): Seq[String] = {
+    if (files.isEmpty) return Seq.empty
+    val candidates = predicateCandidates(files, stats, schema, predicate)
+    val fresh: Option[DataFrame] =
+      if (candidates.isEmpty) None
+      else Some(taggedLive(spark, dir, candidates, schema, dvFiles)
+        .filter(predicate).select("__file", "__pos"))
+    if (fresh.isEmpty && dvFiles.isEmpty) return Seq.empty
+    // cached: emptiness probe + DV write below share one tombstone scan
+    // (deleted-rows-sized result)
+    val union =
+      ((fresh, dvFiles.isEmpty) match {
+        case (Some(f), true) => f
+        case (Some(f), false) => dvRows(spark, dir, dvFiles).unionByName(f)
+        case (None, _) => dvRows(spark, dir, dvFiles)
+      }).cache()
+    try {
+      if (union.isEmpty) Seq.empty
+      else writeSegment(union.coalesce(1), dir, next)
+    } finally { union.unpersist(); () }
+  }
+
   /** DELETE WHERE, by DELETION VECTOR — row-level delete that rewrites
     * NO data segment (Delta's deletion vectors / Iceberg's position
     * deletes): the matching rows' (file, position) pairs land as a
@@ -1285,7 +1381,6 @@ object ManagedTable {
     */
   def deleteWhere(spark: SparkSession, dir: String,
       predicate: org.apache.spark.sql.Column, tag: String = ""): Int = {
-    import org.apache.spark.sql.functions._
     val vs = versions(spark, dir)
     require(vs.nonEmpty, s"ManagedTable.deleteWhere: no versions in $dir")
     val current = vs.last
@@ -1306,18 +1401,10 @@ object ManagedTable {
     // every candidate pruned: provably nothing matches — same no-op
     // version as a predicate matching no rows (the fresh.isEmpty path)
     if (candidates.isEmpty) return current
-    val tagged = spark.read.schema(ColumnMapping.physSchema(schema))
-      .parquet(candidates.map(p => s"$dir/$p"): _*)
-      .withColumn("__file", relPathCol)
-      .withColumn("__pos", col("_metadata.row_index"))
-    val live =
-      if (dvFiles.isEmpty) tagged
-      else tagged.join(dvRows(spark, dir, dvFiles),
-        Seq("__file", "__pos"), "left_anti")
     // cached: the emptiness probe and the DV write below would each
     // re-run the full tombstone scan otherwise; the result is
     // deleted-rows-sized
-    val fresh = relogical(live, schema, Seq("__file", "__pos"))
+    val fresh = taggedLive(spark, dir, candidates, schema, dvFiles)
       .filter(predicate).select("__file", "__pos").cache()
     try {
       if (fresh.isEmpty) return current
@@ -1399,8 +1486,8 @@ object ManagedTable {
       dir, next)
     val written =
       if (newDataAll.isEmpty) spark.emptyDataFrame
-      else relogical(spark.read.schema(ColumnMapping.physSchema(schema))
-        .parquet(newDataAll.map(p => s"$dir/$p"): _*), schema)
+      else relogical(scanFiles(spark, dir, newDataAll,
+        ColumnMapping.physSchema(schema)), schema)
     val writtenEmpty = newDataAll.isEmpty || written.isEmpty
     val constraintOk = writtenEmpty ||
       written.filter(!coalesce(predicate, lit(false))).isEmpty
@@ -1424,42 +1511,9 @@ object ManagedTable {
       else { // empty replacement degrades to a delete: drop the empty segment
         dropSegments(); Seq.empty }
     // tombstone the live rows the predicate selects (deleteWhere's
-    // scan), zone-map pruned the same way: only files whose recorded
-    // stats can hold a predicate-matching row are opened; pruning all
-    // of them proves the tombstone set empty without any scan (old DV
-    // entries, if any, still consolidate below — identical manifest to
-    // the unpruned path)
-    val dvSeg: Seq[String] = if (files.isEmpty) Seq.empty else {
-      val candidates = predicateCandidates(files, stats, schema, predicate)
-      val fresh: Option[DataFrame] = if (candidates.isEmpty) None else {
-        val tagged = spark.read.schema(ColumnMapping.physSchema(schema))
-          .parquet(candidates.map(p => s"$dir/$p"): _*)
-          .withColumn("__file", relPathCol)
-          .withColumn("__pos", col("_metadata.row_index"))
-        val live =
-          if (dvFiles.isEmpty) tagged
-          else tagged.join(dvRows(spark, dir, dvFiles),
-            Seq("__file", "__pos"), "left_anti")
-        Some(relogical(live, schema, Seq("__file", "__pos"))
-          .filter(predicate).select("__file", "__pos"))
-      }
-      if (fresh.isEmpty && dvFiles.isEmpty) Seq.empty
-      else {
-        // cached: emptiness probe + DV write below share one tombstone
-        // scan (deleted-rows-sized result)
-        val union =
-          ((fresh, dvFiles.isEmpty) match {
-            case (Some(f), true) => f
-            case (Some(f), false) =>
-              dvRows(spark, dir, dvFiles).unionByName(f)
-            case (None, _) => dvRows(spark, dir, dvFiles)
-          }).cache()
-        try {
-          if (union.isEmpty) Seq.empty
-          else writeSegment(union.coalesce(1), dir, next)
-        } finally { union.unpersist(); () }
-      }
-    }
+    // scan, zone-map pruned the same way)
+    val dvSeg = tombstoneSegment(spark, dir, files, stats, schema,
+      dvFiles, predicate, next)
     writeManifest(spark, dir, next, tag,
       files ++ newData ++ dvSeg.map("dv:" + _), schema.json,
       stats ++ segmentStats(spark, dir, newData,
@@ -1484,7 +1538,7 @@ object ManagedTable {
   private[sources] def replaceStaged(spark: SparkSession, dir: String,
       predicate: org.apache.spark.sql.Column, newFiles: Seq[String],
       writeSchema: org.apache.spark.sql.types.StructType): Int = {
-    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.functions.{coalesce, lit}
     require(versions(spark, dir).nonEmpty,
       s"graft: REPLACE WHERE needs an existing table at $dir")
     if (newFiles.nonEmpty) {
@@ -1492,9 +1546,8 @@ object ManagedTable {
       // the table's mapping); the predicate speaks logical
       val headSchema = readManifest(spark, dir, versions(spark, dir).last)
         ._3.map(schemaOf).getOrElse(writeSchema)
-      val written = relogical(
-        spark.read.schema(ColumnMapping.physSchema(headSchema))
-          .parquet(newFiles.map(p => s"$dir/$p"): _*), headSchema)
+      val written = relogical(scanFiles(spark, dir, newFiles,
+        ColumnMapping.physSchema(headSchema)), headSchema)
       require(written.filter(!coalesce(predicate, lit(false))).isEmpty,
         "graft: every REPLACE WHERE row must satisfy the predicate " +
           "(Delta's replaceWhere constraint — it is what makes the " +
@@ -1514,37 +1567,8 @@ object ManagedTable {
       val schema = schemaJson.map(schemaOf).getOrElse(writeSchema)
       // zone-map pruned like [[replaceWhere]]: open only files whose
       // recorded stats can hold a predicate-matching row
-      val dvSeg: Seq[String] = if (files.isEmpty) Seq.empty else {
-        val candidates = predicateCandidates(files, stats, schema, predicate)
-        val fresh: Option[DataFrame] = if (candidates.isEmpty) None else {
-          val tagged = spark.read.schema(ColumnMapping.physSchema(schema))
-            .parquet(candidates.map(p => s"$dir/$p"): _*)
-            .withColumn("__file", relPathCol)
-            .withColumn("__pos", col("_metadata.row_index"))
-          val live =
-            if (dvFiles.isEmpty) tagged
-            else tagged.join(dvRows(spark, dir, dvFiles),
-              Seq("__file", "__pos"), "left_anti")
-          Some(relogical(live, schema, Seq("__file", "__pos"))
-            .filter(predicate).select("__file", "__pos"))
-        }
-        if (fresh.isEmpty && dvFiles.isEmpty) Seq.empty
-        else {
-          // cached: emptiness probe + DV write below share one
-          // tombstone scan (deleted-rows-sized result)
-          val union =
-            ((fresh, dvFiles.isEmpty) match {
-              case (Some(f), true) => f
-              case (Some(f), false) =>
-                dvRows(spark, dir, dvFiles).unionByName(f)
-              case (None, _) => dvRows(spark, dir, dvFiles)
-            }).cache()
-          try {
-            if (union.isEmpty) Seq.empty
-            else writeSegment(union.coalesce(1), dir, next)
-          } finally { union.unpersist(); () }
-        }
-      }
+      val dvSeg = tombstoneSegment(spark, dir, files, stats, schema,
+        dvFiles, predicate, next)
       try {
         writeManifest(spark, dir, next, tag = "",
           files ++ newFiles ++ dvSeg.map("dv:" + _), schema.json,
@@ -2162,25 +2186,24 @@ object ManagedTable {
       tag: String): Int = {
     import org.apache.spark.sql.functions.{broadcast, col}
     val spark = changes.sparkSession
-    if (versions(spark, dir).isEmpty)
+    val vs = versions(spark, dir)
+    if (vs.isEmpty)
       return commit(
         graft.operators.ApplyChanges.latestByKey(changes, keys, sequenceBy),
         dir, tag)
-    val current = versions(spark, dir).last
+    val current = vs.last
     val (_, currentAll, currentSchemaJ, currentStats) =
       readManifest(spark, dir, current)
     val (currentFiles, currentDv) = splitDv(currentAll)
-    val base = read(spark, dir, Some(current))
     // the MANIFEST schema (its column mapping included) drives every
-    // segment-facing read/write below; `base.schema` is its logical,
-    // metadata-free projection
-    val tableSchema = currentSchemaJ.map(schemaOf).getOrElse(base.schema)
+    // segment-facing read/write below
+    val tableSchema = currentSchemaJ.map(schemaOf).getOrElse(
+      throw new IllegalStateException(
+        s"ManagedTable.merge: version $current of $dir has no recorded schema"))
     // step 1: which files contain a changed key? (file paths only —
-    // driver-side metadata, same scale as the manifest itself).
-    // _metadata must be tagged ON the scan, before any DV anti-join
-    // (metadata columns don't resolve through derived plans), and the
-    // DV applied after: a file whose only changed-key rows are all
-    // tombstoned needs no rewrite.
+    // driver-side metadata, same scale as the manifest itself). The DV
+    // is applied before the semi-join: a file whose only changed-key
+    // rows are all tombstoned needs no rewrite.
     // cached: the key frame feeds the bounds agg AND the discovery
     // semi-join broadcast — and it is the COLUMN-PRUNED projection of
     // the changeset (caching the full-width changeset instead would
@@ -2214,16 +2237,7 @@ object ManagedTable {
     val affectedPaths =
       if (candidates.isEmpty) Set.empty[String]
       else {
-        val tagged = spark.read
-          .schema(ColumnMapping.physSchema(tableSchema))
-          .parquet(candidates.map(p => s"$dir/$p"): _*)
-          .withColumn("__file", relPathCol)
-          .withColumn("__pos", col("_metadata.row_index"))
-        val live =
-          if (currentDv.isEmpty) tagged
-          else tagged.join(dvRows(spark, dir, currentDv),
-            Seq("__file", "__pos"), "left_anti")
-        relogical(live, tableSchema, Seq("__file"))
+        taggedLive(spark, dir, candidates, tableSchema, currentDv)
           .select((keys.map(col) :+ col("__file")): _*)
           .join(broadcast(changeKeys), keys, "left_semi")
           .select("__file").distinct()
@@ -2240,8 +2254,13 @@ object ManagedTable {
     val next = current + 1
     val affectedRows =
       if (affected.isEmpty)
+        // the schema a read of `current` has: logical, and nullable as
+        // every parquet scan is (an empty version reads as recorded)
         spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], base.schema)
+          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+          if (currentFiles.isEmpty) ColumnMapping.strip(tableSchema)
+          else org.apache.spark.sql.graftshim.ColumnBridge.asNullable(
+            ColumnMapping.strip(tableSchema)))
       // DV-aware: rewriting an affected file must not resurrect its
       // deletion-vectored rows
       else scanMinusDv(spark, dir, affected, tableSchema, currentDv)
@@ -2493,9 +2512,7 @@ object ManagedTable {
     // with no recorded row count are skipped (fraction unprovable).
     val dvHeavy: Seq[String] = rewriteDvFraction match {
       case Some(frac) if dvFiles.nonEmpty && frac > 0 =>
-        val tomb = dvRows(spark, dir, dvFiles)
-          .groupBy("__file").count()
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+        val tomb = dvCounts(spark, dir, dvFiles)
         files.filter { rel =>
           val rows = stats.get(rel).flatMap(_.get(RowsStat))
             .flatMap(p => scala.util.Try(p._1.toLong).toOption)
@@ -2747,4 +2764,46 @@ object ManagedTable {
       // one file's footer. DV applied like every read path.
       scanMinusDv(spark, dir, kept, schema, dvFiles).filter(pred)
   }
+}
+
+/** The [[org.apache.spark.sql.execution.datasources.FileIndex]] behind
+  * [[ManagedTable.scanFiles]]: a fixed list of file statuses taken from
+  * a manifest (or a writer's staged files). It lists nothing — the
+  * files are immutable once written, so `refresh` has nothing to do —
+  * and has no partition columns, as the segment directories are not
+  * `key=value` named. Equal file lists give equal indexes (as
+  * `InMemoryFileIndex` compares its root paths), which is what lets a
+  * cached read be found again by the next read of the same version.
+  */
+private[sources] final class ManifestFileIndex(
+    files: Seq[org.apache.hadoop.fs.FileStatus])
+    extends org.apache.spark.sql.execution.datasources.FileIndex {
+  import org.apache.spark.sql.execution.datasources.{FileStatusWithMetadata,
+    PartitionDirectory}
+
+  override val rootPaths: Seq[Path] = files.map(_.getPath)
+
+  override def listFiles(
+      partitionFilters: Seq[org.apache.spark.sql.catalyst.expressions.Expression],
+      dataFilters: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
+      : Seq[PartitionDirectory] =
+    Seq(PartitionDirectory(org.apache.spark.sql.catalyst.InternalRow.empty,
+      files.map(FileStatusWithMetadata(_))))
+
+  override def inputFiles: Array[String] =
+    files.map(_.getPath.toUri.toString).toArray
+
+  override def refresh(): Unit = ()
+
+  override def sizeInBytes: Long = files.map(_.getLen).sum
+
+  override def partitionSchema: org.apache.spark.sql.types.StructType =
+    org.apache.spark.sql.types.StructType(Nil)
+
+  override def equals(other: Any): Boolean = other match {
+    case o: ManifestFileIndex => rootPaths == o.rootPaths
+    case _ => false
+  }
+
+  override def hashCode(): Int = rootPaths.hashCode()
 }

@@ -126,6 +126,13 @@ object ColumnBridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** `schema` with every field (nested ones too) nullable — what a file
+    * source does to a user-specified read schema (`asNullable` is
+    * private[spark]).
+    */
+  def asNullable(schema: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType = schema.asNullable
+
   /** Register a function builder on an EXISTING session's registry (the
     * withExtensions route only applies at session construction).
     */
