@@ -20,6 +20,10 @@ import org.apache.spark.sql.streaming.Trigger
   * distributed store; nothing here is driver-resident — the stand-in
   * replay source is the only sandbox substitution (wire-identical to the
   * Kafka source, see KafkaIngest).
+  *
+  * `dir` defaults to [[PosPipeline.DataDir]], the committed synthetic POS
+  * fixture; pass another directory in the same `_1000` layout to run the
+  * medallion over it.
   */
 object Medallion {
 

@@ -6,8 +6,8 @@ import org.apache.spark.sql.types._
 import graft.operators.ApplyChanges
 
 /** The reference pipeline (btison/db-cdc-poc) re-expressed end-to-end in
-  * plain Scala Spark over its own simulated POS data: explicit-schema CSV
-  * ingestion, transaction re-nesting, JSON event parsing with explode,
+  * plain Scala Spark over POS data in its `_1000` CSV layout: explicit-schema
+  * CSV ingestion, transaction re-nesting, JSON event parsing with explode,
   * keyed dedup, snapshot CDC apply, and the gold current-inventory query —
   * both as a DataFrame chain and as the literal SQL (they must agree; see
   * PosPipelineSpec).
@@ -15,10 +15,21 @@ import graft.operators.ApplyChanges
   * Schemas cite the reference: change CSV 02_Data_Generation.py:38-45,
   * snapshot CSV 02:82-88, dims 03_Data_Ingestion.py:53-56/81-86/109-112,
   * event JSON 03:182-193, gold query 04_Current_Inventory.sql:5-38.
+  *
+  * Every reader defaults to [[DataDir]], the synthetic fixture the
+  * repository holds (FIXTURES.md §A); pass `dir` to read another copy of
+  * the layout, such as the reference's own `_1000` files.
   */
 object PosPipeline {
 
-  val DataDir = "/root/reference/data/point_of_sale_simulated_1000"
+  /** The committed synthetic POS fixture, `data/point_of_sale_simulated_1000`
+    * under the working directory (the repository root under sbt), as an
+    * absolute path. Only a path string: nothing is read until a frame is
+    * built.
+    */
+  val DataDir: String =
+    java.nio.file.Paths.get("data", "point_of_sale_simulated_1000")
+      .toAbsolutePath.toString
 
   val changeSchema: StructType = StructType(Seq(
     StructField("trans_id", StringType),
@@ -215,7 +226,9 @@ object PosPipeline {
       .schema(changeSchema)
       .csv(dir)
 
-  /** §7.2 minimum slice: the whole pipeline on the reference's own data. */
+  /** §7.2 minimum slice: the whole pipeline over the POS files in `dir`
+    * (by default the committed synthetic fixture).
+    */
   def runEndToEnd(spark: SparkSession, dir: String = DataDir): DataFrame = {
     val changes  = dedupChanges(readChanges(spark, dir))
     val snapshot = inventorySnapshot(readSnapshots(spark, dir))

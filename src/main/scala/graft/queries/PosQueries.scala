@@ -7,8 +7,9 @@ import graft.pos.PosPipeline
 
 /** The reference pipeline itself, under the oracle gate: CSV ingest →
   * keyed dedup → snapshot CDC apply → gold current-inventory query, over
-  * the reference's own simulated POS data, hash-checked against a DuckDB
-  * replication reading the same CSVs.
+  * the committed synthetic POS fixture ([[PosPipeline.DataDir]], the
+  * reference's `_1000` layout), hash-checked against a DuckDB replication
+  * reading the same CSVs.
   *
   * Deviations from the notebooks, both deterministic-by-construction:
   * dedup keeps the earliest (date_time, store_id) report per
@@ -23,9 +24,9 @@ object PosQueries {
   val q27PosGold = NamedQuery(
     "q27_pos_gold",
     "The reference's end-to-end gold pipeline (04_Current_Inventory.sql) " +
-      "on its own data: S1/S2/S3 scans, deterministic O21 dedup, O22 " +
-      "snapshot apply, J1-J3 joins, A2 aggregate. sfDir is ignored — this " +
-      "query pins the reference fixture.",
+      "on the committed synthetic POS fixture: S1/S2/S3 scans, deterministic " +
+      "O21 dedup, O22 snapshot apply, J1-J3 joins, A2 aggregate. sfDir is " +
+      "ignored — this query pins the POS fixture.",
     (s, _) => {
       // quantity + change_type_id tiebreakers make the ordering TOTAL:
       // without them two reports sharing (trans_id, item_id, date_time,

@@ -21,7 +21,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * key/value binary, topic, partition, offset, timestamp.
   *
   * Options:
-  *   - `dir`  — POS fixture directory (default: the _1000 set)
+  *   - `dir`  — POS fixture directory (default: [[graft.pos.PosPipeline.DataDir]],
+  *     the committed synthetic `_1000` fixture)
   *   - `maxRecordsPerTrigger` — replay rate cap, the analog of the
   *     reference's `maxOffsetsPerTrigger='100'` (default 100)
   *
@@ -50,8 +51,6 @@ object PosReplaySource {
     StructField("partition", IntegerType),
     StructField("offset", LongType),
     StructField("timestamp", TimestampType)))
-
-  val DefaultDir = "/root/reference/data/point_of_sale_simulated_1000"
 
   /** One transaction document: (key bytes, value bytes, event-time µs). */
   final case class Doc(key: Array[Byte], value: Array[Byte], tsUs: Long)
@@ -99,7 +98,7 @@ class PosReplayTable(props: util.Map[String, String])
     util.EnumSet.of(TableCapability.MICRO_BATCH_READ, TableCapability.BATCH_READ)
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
-    val dir = options.getOrDefault("dir", PosReplaySource.DefaultDir)
+    val dir = options.getOrDefault("dir", graft.pos.PosPipeline.DataDir)
     val rate = options.getOrDefault("maxRecordsPerTrigger", "100").toInt
     new ScanBuilder {
       override def build(): Scan = new Scan {

@@ -34,7 +34,8 @@ class CheckpointRecoverySpec extends SparkSpec {
       .option("path", out).option("checkpointLocation", ckpt)
       .trigger(Trigger.ProcessingTime("1 second")).start()
     val deadline = System.currentTimeMillis() + 120000
-    while (q1.recentProgress.map(_.numInputRows).sum < Rate &&
+    // a dead q1 stops the wait, so awaitTermination rethrows its error now
+    while (q1.isActive && q1.recentProgress.map(_.numInputRows).sum < Rate &&
         System.currentTimeMillis() < deadline) Thread.sleep(50)
     q1.stop()
     q1.awaitTermination()
