@@ -63,17 +63,24 @@ object Bench {
       only.forall(s => s.contains(name) || s.contains(name.takeWhile(_ != '_')))
     }
     // profile loaded up front: it also decides which queries warm up
-    val profile: Map[String, Double] = {
+    val profileText: String = {
       val p = java.nio.file.Paths.get(
         sys.env.getOrElse("SPARK_GRAFT_BENCH_PROFILE", "bench_profile.json"))
-      if (!java.nio.file.Files.isReadable(p)) Map.empty
-      else {
-        val txt = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-        """"(q[0-9A-Za-z]+)"\s*:\s*([0-9.]+)""".r
-          .findAllMatchIn(txt).map(m => m.group(1) -> m.group(2).toDouble)
-          .toMap
-      }
+      if (!java.nio.file.Files.isReadable(p)) ""
+      else new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
     }
+    val profile: Map[String, Double] =
+      """"(q[0-9A-Za-z]+)"\s*:\s*([0-9.]+)""".r
+        .findAllMatchIn(profileText).map(m => m.group(1) -> m.group(2).toDouble)
+        .toMap
+    // the cpus of the host the profile was measured on (absent from
+    // profiles older than the key): ratios against a profile taken on
+    // another host measure the host, not the code
+    val profileNcpu: Option[Int] =
+      """"ncpu"\s*:\s*([0-9]+)""".r.findFirstMatchIn(profileText)
+        .map(_.group(1).toInt)
+    val profileHostMatch =
+      profileNcpu.contains(Runtime.getRuntime.availableProcessors)
     def shortName(name: String) = name.takeWhile(_ != '_')
     val warmDir = "/root/testdata/sf0.001"
     if (java.nio.file.Files.isDirectory(java.nio.file.Paths.get(warmDir)))
@@ -227,9 +234,13 @@ object Bench {
     val fpMap = suspicious.toSeq.sorted
       .map(n => "\"" + shortName(n) + "\":" + f3(firstPass(n)))
       .mkString("{", ",", "}")
+    // global_shift is a claim about load only against a profile from
+    // this host; across hosts it is null (the reruns stay capped)
     val line = jsonLine(f3(total), qmap(f3)).dropRight(1) +
       s""","first_pass":$fpMap,"n_suspicious":${suspicious.size}""" +
-      s""","global_shift":$globalShift}"""
+      s""","profile_ncpu":${profileNcpu.getOrElse("null")}""" +
+      s""","profile_host_match":$profileHostMatch""" +
+      s""","global_shift":${if (profileHostMatch) globalShift else "null"}}"""
     // also land the line as a committed artifact: the driver keeps only a
     // 2000-char log tail, which has truncated (unparseable) past rounds'
     // per-query maps — the file is the machine-readable record. An

@@ -14,7 +14,10 @@ import org.apache.parquet.example.data.Group
 import org.apache.parquet.schema.MessageType
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression,
+  Expression, GenericInternalRow}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext,
+  ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table,
   TableCapability, TableProvider}
@@ -53,13 +56,15 @@ import org.apache.spark.unsafe.types.UTF8String
   *     returned to Spark as a post-scan filter, so a file kept
   *     conservatively (missing stats, unparseable endpoints) never
   *     leaks wrong rows.
-  *   - **Deletion vectors**: the plan loads only per-file tombstone
-  *     COUNTS (O(changed files) driver memory) and ships DV file
-  *     refs into the partitions; each reading TASK resolves its own
-  *     file's positions from the sidecar with a pushed `__file`
-  *     predicate ([[GraftDvReader]]) and skips them while decoding —
-  *     same semantics as every [[ManagedTable]] read path, with a
-  *     bulk delete's positions never landing on the driver.
+  *   - **Deletion vectors**: the plan resolves the version's DV once
+  *     ([[GraftDvReader.DvPlan]], the plan every [[ManagedTable]]
+  *     read uses too): a small DV's positions ride inline in the
+  *     partitions; a bulk DV ships only per-file tombstone COUNTS
+  *     (O(changed files) driver memory) and DV file refs, and each
+  *     reading TASK resolves its own file's positions from the
+  *     sidecar with a pushed `__file` predicate. The reader skips
+  *     them while decoding, and a bulk delete's positions never land
+  *     on the driver.
   *   - **Time travel**: `.option("versionAsOf", n)` or
   *     `.option("timestampAsOf", epochMillis | "yyyy-MM-dd HH:mm:ss")`
   *     (newest version whose manifest landed at or before the
@@ -792,11 +797,12 @@ private[graft] class GraftScanBuilder(meta: GraftTableMeta,
           usable.forall(f => GraftScanBuilder.mayMatch(f, meta, rel)))
       }
     val all = meta.files
-    // the version's DV, resolved by the two-tier plan (ONE bounded
-    // driver job — [[GraftDvReader.DvPlan]]): positions inline for
-    // small versions, per-file counts + executor-side per-task
-    // resolution for bulk deletes, so the planner costs O(files) in
-    // driver memory however many rows a delete hit
+    // the version's DV, resolved by the two-tier plan
+    // ([[GraftDvReader.DvPlan]] — a driver-side read, no Spark job,
+    // under the inline cap): positions inline for small versions,
+    // per-file counts + executor-side per-task resolution for bulk
+    // deletes, so the planner costs O(files) in driver memory however
+    // many rows a delete hit
     val dvPlan = GraftDvReader.DvPlan.resolve(spark, meta.dir,
       meta.dvFiles)
     // per-file LIVE row counts (manifest count minus DV'd positions) —
@@ -1115,20 +1121,12 @@ private[graft] class GraftScan(meta: GraftTableMeta,
       limit.map(n => s" pushedLimit=$n").getOrElse("") +
       topN.map(t => s" pushedTopN=${t.column}:" +
         s"${if (t.desc) "desc" else "asc"}:${t.n}").getOrElse("")
-  // DV shipping tier (see GraftInputPartition): positions inline for
-  // small versions, refs + executor-side resolution for bulk deletes
-  private val dvAbs: Array[String] =
-    meta.dvFiles.map(p => s"${meta.dir}/$p").toArray
-
   override def planInputPartitions(): Array[InputPartition] = {
     GraftScan.trace(s"[graft-debug] id=${System.identityHashCode(this)} " +
       s"planInputPartitions kept=${kept.size}")
     kept.map(rel => GraftInputPartition(s"${meta.dir}/$rel",
-      relPath = rel,
-      dvRefs =
-        if (dvPlan.inline.isEmpty && dvPlan.counts.contains(rel)) dvAbs
-        else null,
-      dvInline = dvPlan.inline.flatMap(_.get(rel)).orNull)
+      relPath = rel, dvRefs = dvPlan.refsFor(rel),
+      dvInline = dvPlan.inlineFor(rel))
       : InputPartition).toArray
   }
   // columnar (vectorized) decode whenever at least one column is
@@ -1566,13 +1564,13 @@ private[sources] class GraftMicroBatchStream(dir: String,
     val (_, all, _, _) = ManagedTable.readManifest(spark, dir, v)
     val (files, dvFiles) = ManagedTable.splitDv(all)
     // the snapshot base is the one emission that can carry tombstones;
-    // the two-tier DV plan (one bounded job) inlines positions for a
-    // small version or ships refs for executor-side per-task
-    // resolution ([[GraftDvReader]]); append deltas never carry DV
+    // the two-tier DV plan (job-free under the inline cap) inlines
+    // positions for a small version or ships refs for executor-side
+    // per-task resolution ([[GraftDvReader]]); append deltas never
+    // carry DV
     val dvp =
       if (!snapshotBase) GraftDvReader.DvPlan.Empty
       else GraftDvReader.DvPlan.resolve(spark, dir, dvFiles)
-    val dvAbs: Array[String] = dvFiles.map(p => s"$dir/$p").toArray
     val prev: Set[String] =
       if (v == 1 || snapshotBase) Set.empty
       else {
@@ -1588,10 +1586,8 @@ private[sources] class GraftMicroBatchStream(dir: String,
           "CDC-shaped consumption, or .option(\"ignoreChanges\", " +
           "true) to re-emit rewritten files")
     files.filterNot(prev.contains)
-      .map(rel => (s"$dir/$rel", rel,
-        if (dvp.inline.isEmpty && dvp.counts.contains(rel)) dvAbs
-        else null,
-        dvp.inline.flatMap(_.get(rel)).orNull))
+      .map(rel => (s"$dir/$rel", rel, dvp.refsFor(rel),
+        dvp.inlineFor(rel)))
   }
 
   // micro-batches decode through the vectorized columnar path — a
@@ -1687,10 +1683,11 @@ private[sources] class GraftCdfMicroBatchStream(dir: String,
   }
 
   /** The change partitions of ONE version — manifest set arithmetic
-    * plus one per-file DV COUNT aggregation per side (O(changed
-    * files) on the driver). Positions take the two-tier shipping
-    * path ([[GraftInputPartition]]): INLINE when both sides' totals
-    * fit the [[GraftDvReader.InlineMaxRowsConf]] cap (the planner
+    * plus one [[GraftDvReader.DvPlan]] per side (O(changed files) on
+    * the driver; a Spark job only for a bulk side). Positions take
+    * the two-tier shipping path ([[GraftInputPartition]]): INLINE
+    * when both sides' totals fit the
+    * [[GraftDvReader.InlineMaxRowsConf]] cap (the planner
     * diffs new ∖ old itself, validates cumulativity up front, and
     * skips no-change files — zero per-task sidecar IO), else DV file
     * REFS with executor-side resolution — a bulk-delete version
@@ -1706,14 +1703,9 @@ private[sources] class GraftCdfMicroBatchStream(dir: String,
     val (files, dvFiles) = ManagedTable.splitDv(all)
     val ms = commitMs(v)
     val newDvp = GraftDvReader.DvPlan.resolve(spark, dir, dvFiles)
-    val newDvAbs = dvFiles.map(p => s"$dir/$p").toArray
     def insertPart(rel: String): InputPartition =
       GraftInputPartition(s"$dir/$rel", relPath = rel,
-        dvRefs =
-          if (newDvp.inline.isEmpty && newDvp.counts.contains(rel))
-            newDvAbs
-          else null,
-        dvInline = newDvp.inline.flatMap(_.get(rel)).orNull,
+        dvRefs = newDvp.refsFor(rel), dvInline = newDvp.inlineFor(rel),
         changeType = "insert", commitVersion = v, commitMs = ms)
     // the snapshot base (fresh stream / oldest retained start) emits
     // the whole version as inserts, tombstones applied — exactly what
@@ -1734,7 +1726,6 @@ private[sources] class GraftCdfMicroBatchStream(dir: String,
           "change feed past this version")
     val inserts = files.filterNot(pSet).map(insertPart)
     val oldDvp = GraftDvReader.DvPlan.resolve(spark, dir, pDvFiles)
-    val oldDvAbs = pDvFiles.map(p => s"$dir/$p").toArray
     val carried = files.filter(pSet)
       .filter(rel =>
         newDvp.counts.contains(rel) || oldDvp.counts.contains(rel))
@@ -1764,10 +1755,10 @@ private[sources] class GraftCdfMicroBatchStream(dir: String,
         // file gets a partition), and emits new ∖ old
         carried.map { rel =>
           GraftInputPartition(s"$dir/$rel", relPath = rel,
-            dvRefs = newDvAbs,
+            dvRefs = newDvp.refs,
             changeType = "delete", commitVersion = v, commitMs = ms,
             oldDvRefs =
-              if (oldDvp.counts.contains(rel)) oldDvAbs else null)
+              if (oldDvp.counts.contains(rel)) oldDvp.refs else null)
             : InputPartition
         }
     }
@@ -1778,14 +1769,17 @@ private[sources] class GraftCdfMicroBatchStream(dir: String,
     new GraftCdfReaderFactory(baseJson, GraftDvReader.sessionConfSer())
 }
 
-/** EXECUTOR-SIDE deletion-vector resolution: the sorted tombstoned
-  * positions of ONE data file, read from the version's DV parquet
-  * with a pushed `__file = <rel>` predicate (parquet filter2 —
-  * row-group stats, dictionary, and record-level filtering), so each
-  * task touches only its own file's rows of the deleted-rows-sized
-  * sidecar. The planner ships DV file REFS into the partitions and
-  * never collects positions — driver memory stays O(changed files)
-  * however large the delete.
+/** Deletion-vector resolution for BOTH read paths. A read resolves its
+  * version's DV ONCE, on the driver and with no Spark job for the
+  * common small case ([[GraftDvReader.DvPlan]]); the connector's
+  * readers then skip the positions while decoding, and every
+  * [[ManagedTable]] scan filters them out in the scan with [[DvLive]].
+  * Bulk versions resolve ONE data file's sorted tombstoned positions
+  * executor-side, from the version's DV parquet with a pushed
+  * `__file = <rel>` predicate (parquet filter2 — row-group stats,
+  * dictionary, and record-level filtering), so each task touches only
+  * its own file's rows of the deleted-rows-sized sidecar and driver
+  * memory stays O(changed files) however large the delete.
   */
 private[sources] object GraftDvReader {
   import org.apache.parquet.filter2.compat.FilterCompat
@@ -1793,12 +1787,12 @@ private[sources] object GraftDvReader {
   import org.apache.parquet.io.api.Binary
 
   /** Versions whose TOTAL tombstone count is at or under this inline
-    * their positions into the partitions at plan time (one bounded
-    * driver-side read — ≤ ~800 KB of longs at the default, the size
-    * class where per-task sidecar probes cost more than they save);
-    * versions beyond it ship DV file refs and resolve executor-side.
-    * The cap is what makes the driver cost BOUNDED, not table-shaped:
-    * a bulk delete can never land whole on the driver.
+    * their positions into the plan (one bounded driver-side read —
+    * ≤ ~800 KB of longs at the default, the size class where per-task
+    * sidecar probes cost more than they save); versions beyond it
+    * ship DV file refs and resolve executor-side. The cap is what
+    * makes the driver cost BOUNDED, not table-shaped: a bulk delete
+    * can never land whole on the driver.
     */
   val InlineMaxRowsConf = "spark.graft.dv.inlineMaxRows"
   private val DefaultInlineMaxRows = 100000L
@@ -1807,53 +1801,128 @@ private[sources] object GraftDvReader {
     spark.conf.getOption(InlineMaxRowsConf).map(_.toLong)
       .getOrElse(DefaultInlineMaxRows)
 
-  /** The plan-time DV decision, resolved in ONE bounded Spark job: a
-    * `limit(cap+1)` probe of the DV parquet. If every tombstone came
-    * back, that IS the version's DV — positions inline into the
-    * partitions and counts derive for free; if the probe overflowed,
-    * the version is bulk — a per-file COUNT aggregation (the only
-    * fact partition planning still needs) replaces positions, and
-    * tasks resolve their own file's rows executor-side. Driver memory
-    * is capped at `cap + 1` rows either way.
+  /** The plan-time DV decision of one version. The driver reads the DV
+    * parquet itself (parquet-mr under the session's Hadoop conf — no
+    * Spark job), footers first. If the footers record at most `cap`
+    * rows, every tombstone is read: sorted positions inline, counts
+    * derived for free. Past the cap, the version is bulk and no row
+    * is read on the driver: a per-file COUNT aggregation (one Spark
+    * job — the only fact planning still needs) replaces positions,
+    * and readers resolve their own file's rows from `refs`. Driver
+    * memory is capped at `cap` rows either way. Equality is by VALUE — the counts,
+    * then the inline positions or the refs — so two reads of one
+    * version plan equal filters and a cached read is found again.
     */
   private[sources] final case class DvPlan(counts: Map[String, Long],
-      inline: Option[Map[String, Array[Long]]])
+      inline: Option[Map[String, Array[Long]]], refs: Array[String]) {
+    /** The DV files a reader of `rel` resolves itself: bulk tier, and
+      * only for a tombstoned file; else null.
+      */
+    def refsFor(rel: String): Array[String] =
+      if (inline.isEmpty && counts.contains(rel)) refs else null
+    /** `rel`'s inline positions; null on the bulk tier or clean files. */
+    def inlineFor(rel: String): Array[Long] =
+      inline.flatMap(_.get(rel)).orNull
+    /** `rel`'s sorted positions on either tier; `conf` opens the DV
+      * files on the bulk tier only.
+      */
+    def positionsOf(rel: String, conf: => Configuration): Array[Long] =
+      if (!counts.contains(rel)) Array.emptyLongArray
+      else inline.fold(positions(refs, rel, conf))(_(rel))
+
+    override def equals(o: Any): Boolean = o match {
+      case p: DvPlan => (this eq p) || counts == p.counts &&
+        ((inline, p.inline) match {
+          case (Some(a), Some(b)) => a.forall { case (f, x) =>
+            b.get(f).exists(java.util.Arrays.equals(x, _)) }
+          case (None, None) => refs.sameElements(p.refs)
+          case _ => false
+        })
+      case _ => false
+    }
+    override def hashCode: Int = counts.hashCode
+    // plan strings (EXPLAIN, every execution's description) stay short
+    override def toString: String =
+      s"DvPlan(${counts.size} files, ${counts.values.sum} rows, " +
+        s"${if (inline.isDefined) "inline" else "refs"})"
+  }
 
   private[sources] object DvPlan {
-    val Empty: DvPlan = DvPlan(Map.empty, Some(Map.empty))
+    val Empty: DvPlan = DvPlan(Map.empty, Some(Map.empty), Array.empty)
 
     def resolve(spark: SparkSession, dir: String,
         dvFiles: Seq[String]): DvPlan =
       if (dvFiles.isEmpty) Empty
       else {
-        val cap = inlineMaxRows(spark)
-        val probe =
-          if (cap <= 0) Array.empty[org.apache.spark.sql.Row]
-          else ManagedTable.dvRows(spark, dir, dvFiles)
-            .limit(math.min(cap + 1, Int.MaxValue.toLong - 1).toInt)
-            .collect()
-        if (cap > 0 && probe.length <= cap) {
-          val m = probe.groupBy(_.getString(0))
-            .map { case (f, rows) => f -> rows.map(_.getLong(1)).sorted }
-          DvPlan(m.map { case (f, a) => f -> a.length.toLong }, Some(m))
-        } else DvPlan(
-          ManagedTable.dvCounts(spark, dir, dvFiles), None)
+        val refs = dvFiles.map(p => s"$dir/$p").toArray
+        readUpTo(refs, inlineMaxRows(spark),
+          spark.sessionState.newHadoopConf()) match {
+          case Some(m) =>
+            DvPlan(m.map { case (f, a) => f -> a.length.toLong }, Some(m),
+              refs)
+          case None =>
+            DvPlan(ManagedTable.dvRows(spark, dir, dvFiles)
+              .groupBy("__file").count().collect()
+              .map(r => r.getString(0) -> r.getLong(1)).toMap, None, refs)
+        }
       }
   }
 
+  /** Every file's sorted positions in the DV files `refs`, read on the
+    * driver — or None, reading no row, when their footers record more
+    * than `cap` rows. Each file is opened once, for both.
+    */
+  private def readUpTo(refs: Array[String], cap: Long,
+      conf: Configuration): Option[Map[String, Array[Long]]] = {
+    val files = scala.collection.mutable.ArrayBuffer.empty[ParquetFileReader]
+    try {
+      refs.foreach(p => files += ParquetFileReader.open(
+        HadoopInputFile.fromPath(new HPath(p), conf),
+        org.apache.parquet.HadoopReadOptions.builder(conf).build()))
+      if (files.map(_.getRecordCount).sum > cap) None
+      else {
+        val byFile = scala.collection.mutable.HashMap
+          .empty[String, scala.collection.mutable.ArrayBuilder.ofLong]
+        files.foreach { f =>
+          val schema = f.getFooter.getFileMetaData.getSchema
+          val io = new org.apache.parquet.io.ColumnIOFactory()
+            .getColumnIO(schema)
+          var rowGroup = f.readNextRowGroup()
+          while (rowGroup != null) {
+            val rows = io.getRecordReader(rowGroup,
+              new org.apache.parquet.example.data.simple.convert
+                .GroupRecordConverter(schema))
+            var i = 0L
+            while (i < rowGroup.getRowCount) {
+              val g = rows.read()
+              byFile.getOrElseUpdate(g.getString("__file", 0),
+                new scala.collection.mutable.ArrayBuilder.ofLong) +=
+                g.getLong("__pos", 0)
+              i += 1
+            }
+            rowGroup = f.readNextRowGroup()
+          }
+        }
+        Some(byFile.map { case (f, b) => f -> sortedUnique(b.result()) }
+          .toMap)
+      }
+    } finally files.foreach(_.close())
+  }
+
   /** The SESSION's Hadoop configuration wrapped for task shipping —
-    * built driver-side at `createReaderFactory` time and serialized
-    * into the factory, so executor-side file opens (data segments, DV
-    * sidecars) see object-store credentials and filesystem overrides
-    * exactly as a `spark.read.parquet` task would. A bare
-    * `new Configuration()` on the executor drops all of it — the
-    * defect class the bloom sidecar writes fixed in round 13
+    * built driver-side at plan time and serialized into the reader
+    * factory or the [[DvLive]] filter, so executor-side file opens
+    * (data segments, DV sidecars) see object-store credentials and
+    * filesystem overrides exactly as a `spark.read.parquet` task
+    * would. A bare `new Configuration()` on the executor drops all of
+    * it — the defect class the bloom sidecar writes fixed in round 13
     * ([[BloomSkipping.writeSidecarBytes]]); this closes it for reads.
     */
-  private[sources] def sessionConfSer()
+  private[sources] def sessionConfSer(
+      spark: SparkSession = SparkSession.active)
       : org.apache.spark.util.SerializableConfiguration =
     new org.apache.spark.util.SerializableConfiguration(
-      SparkSession.active.sessionState.newHadoopConf())
+      spark.sessionState.newHadoopConf())
 
   def positions(dvRefs: Array[String], relFile: String,
       conf: Configuration = new Configuration()): Array[Long] = {
@@ -1862,10 +1931,7 @@ private[sources] object GraftDvReader {
       Binary.fromString(relFile))
     val buf = scala.collection.mutable.ArrayBuffer.empty[Long]
     dvRefs.foreach { path =>
-      val r = ParquetReader
-        .builder(new GroupReadSupport(), new HPath(path))
-        .withConf(conf)
-        .withFilter(FilterCompat.get(pred)).build()
+      val r = dvReader(path, conf, FilterCompat.get(pred))
       try {
         var g = r.read()
         while (g != null) {
@@ -1874,14 +1940,33 @@ private[sources] object GraftDvReader {
         }
       } finally r.close()
     }
-    val a = buf.toArray
+    sortedUnique(buf.toArray)
+  }
+
+  /** A row reader of one DV file under `conf`. It is built from a
+    * `HadoopInputFile`, so parquet-mr takes its read options from
+    * `conf`: the `Path` builder first makes a `new Configuration()`
+    * and parses the Hadoop default resources for it — 14 ms per open,
+    * against the microseconds the DV's rows take.
+    */
+  private def dvReader(path: String, conf: Configuration,
+      filter: FilterCompat.Filter): ParquetReader[Group] =
+    new ParquetReader.Builder[Group](
+        HadoopInputFile.fromPath(new HPath(path), conf)) {
+      override protected def getReadSupport(): ReadSupport[Group] =
+        new GroupReadSupport()
+    }.withFilter(filter).build()
+
+  /** `a` sorted, in place, with duplicates dropped. deleteWhere and
+    * replaceWhere collapse the DV into one duplicate-free union
+    * segment today, but nothing in the format forbids a position
+    * appearing in two DV files of one version — and
+    * [[GraftPositionalReader]]'s catch-up walk emits the WRONG row
+    * (the one after the target) on a duplicate target. Uniqueness is
+    * enforced here, where both tiers resolve positions.
+    */
+  private def sortedUnique(a: Array[Long]): Array[Long] = {
     java.util.Arrays.sort(a)
-    // DEDUPE after the sort: deleteWhere/replaceWhere collapse the DV
-    // into one duplicate-free union segment today, but nothing in the
-    // format forbids a position appearing in two DV files of one
-    // version — and [[GraftPositionalReader]]'s catch-up walk emits
-    // the WRONG row (the one after the target) on a duplicate target.
-    // Uniqueness is enforced here, where the refs are resolved.
     var n = 0
     var i = 0
     while (i < a.length) {
@@ -1900,6 +1985,64 @@ private[sources] object GraftDvReader {
     if (p.dvInline != null) p.dvInline
     else if (p.dvRefs == null) Array.empty
     else positions(p.dvRefs, p.relPath, conf)
+}
+
+/** TRUE for a LIVE row of a [[ManagedTable.scanFiles]] scan under a
+  * version's deletion vector: the in-scan DV filter of every
+  * [[ManagedTable]] read, `filter(DvLive(_metadata.file_path,
+  * _metadata.row_index))` — no join, no broadcast, no extra Spark
+  * job. Rows arrive in per-file runs, so each file's positions are
+  * looked up once per run: in the plan on the inline tier, or
+  * resolved right here, on the executor, with
+  * [[GraftDvReader.positions]] under the session's Hadoop `conf` on
+  * the bulk tier (`conf` is null on the inline tier and takes no part
+  * in equality, so equal reads still plan equal filters).
+  */
+private[sources] final case class DvLive(filePath: Expression,
+    rowIndex: Expression, plan: GraftDvReader.DvPlan)(
+    conf: org.apache.spark.util.SerializableConfiguration)
+    extends BinaryExpression {
+  override def left: Expression = filePath
+  override def right: Expression = rowIndex
+  override def dataType: DataType = BooleanType
+  override protected def otherCopyArgs: Seq[AnyRef] = conf :: Nil
+
+  // (file path, its positions) of the current run of rows
+  @transient @volatile private var run: (UTF8String, Array[Long]) = _
+
+  def live(path: UTF8String, pos: Long): Boolean = {
+    var r = run
+    if (r == null || r._1 != path) {
+      r = (path.clone(), plan.positionsOf(
+        ManagedTable.relOf(path.toString), conf.value))
+      run = r
+    }
+    java.util.Arrays.binarySearch(r._2, pos) < 0
+  }
+
+  override protected def nullSafeEval(path: Any, pos: Any): Any =
+    live(path.asInstanceOf[UTF8String], pos.asInstanceOf[Long])
+  override protected def doGenCode(ctx: CodegenContext,
+      ev: ExprCode): ExprCode = {
+    val self = ctx.addReferenceObj("dvLive", this)
+    defineCodeGen(ctx, ev, (path, pos) => s"$self.live($path, $pos)")
+  }
+  override protected def withNewChildrenInternal(newLeft: Expression,
+      newRight: Expression): DvLive = copy(newLeft, newRight)(conf)
+}
+
+private[sources] object DvLive {
+  /** The DV filter of a `scanFiles` frame: true for its live rows. */
+  def column(spark: SparkSession, plan: GraftDvReader.DvPlan)
+      : org.apache.spark.sql.Column = {
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.graftshim.ColumnBridge
+    ColumnBridge.column(DvLive(
+      ColumnBridge.expression(col("_metadata.file_path")),
+      ColumnBridge.expression(col("_metadata.row_index")), plan)(
+      if (plan.inline.isDefined) null
+      else GraftDvReader.sessionConfSer(spark)))
+  }
 }
 
 /** Change-feed decode. Insert partitions are the plain row reader

@@ -248,14 +248,14 @@ private[sources] object GraftProcedures {
         // its effective fpp decays. Report how many digested files
         // are tombstoned and the worst tombstoned fraction, so an
         // operator knows when `CALL system.compact(rewrite_dv_fraction
-        // => …)` is due. Cost: one count-per-file pass over the
-        // deleted-rows-sized DV parquet, only when both digests and
-        // DVs exist.
+        // => …)` is due. Cost: the resolved DV's per-file counts (no
+        // job under the inline cap), only when both digests and DVs
+        // exist.
         val digested = files.filter(f => stats.get(f).exists(
           _.keys.exists(_.startsWith(BloomSkipping.StatPrefix))))
         val tomb: Map[String, Long] =
-          if (digested.isEmpty || dvFiles.isEmpty) Map.empty
-          else ManagedTable.dvCounts(spark, dir, dvFiles)
+          if (digested.isEmpty) Map.empty
+          else GraftDvReader.DvPlan.resolve(spark, dir, dvFiles).counts
         val staleFracs = digested.flatMap { f =>
           val t = tomb.getOrElse(f, 0L)
           if (t == 0L) None

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.sources.GraftDvReader.DvPlan
 
 /** A minimal manifest-versioned table over plain parquet — the atomic-
   * visibility core of the lakehouse formats (Delta/Iceberg/Hudi) the
@@ -1191,7 +1192,8 @@ object ManagedTable {
     val schema = schemaJson.map(schemaOf).getOrElse(
       throw new IllegalStateException(
         s"ManagedTable.read: version $v of $dir has no recorded schema"))
-    if (files.nonEmpty) scanMinusDv(spark, dir, files, schema, dvFiles)
+    if (files.nonEmpty) scanMinusDv(spark, dir, files, schema,
+      DvPlan.resolve(spark, dir, dvFiles))
     else
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
@@ -1206,6 +1208,14 @@ object ManagedTable {
     import org.apache.spark.sql.functions._
     concat(lit("data/"),
       substring_index(col("_metadata.file_path"), "/data/", -1))
+  }
+
+  /** [[relPathCol]] of one `_metadata.file_path`, on the JVM — the key
+    * [[DvLive]] looks a scanned file's positions up by.
+    */
+  private[sources] def relOf(filePath: String): String = {
+    val i = filePath.lastIndexOf("/data/")
+    "data/" + (if (i < 0) filePath else filePath.substring(i + 6))
   }
 
   /** A parquet scan of exactly `relFiles` (relative to `dir`) under the
@@ -1245,49 +1255,38 @@ object ManagedTable {
       org.apache.spark.sql.types.LongType)))
 
   /** The (file, pos) rows of a version's deletion vector, read under
-    * the fixed DV schema (no footer inference).
+    * the fixed DV schema (no footer inference) — for the DV WRITES
+    * (each delete unions the live DV with its fresh tombstones) and
+    * the distributed DV comparisons; reads apply a DV through a
+    * resolved [[DvPlan]] instead.
     */
   private[sources] def dvRows(spark: SparkSession, dir: String,
       dvFiles: Seq[String]): DataFrame =
     scanFiles(spark, dir, dvFiles, DvSchema)
 
-  /** Per-file TOMBSTONE COUNTS of a version's deletion vector — the
-    * only DV fact planning ever needs on the driver (live-row math,
-    * which files carry tombstones at all). O(files-with-tombstones)
-    * driver memory regardless of how many rows a bulk delete hit;
-    * the POSITIONS are resolved executor-side per task from the DV
-    * file refs the partitions carry (see GraftDvReader).
+  /** `scan` (a [[scanFiles]] frame) without the rows `dv` tombstones:
+    * a [[DvLive]] row filter inside the scan — no join, no extra job.
     */
-  private[sources] def dvCounts(spark: SparkSession, dir: String,
-      dvFiles: Seq[String]): Map[String, Long] =
-    if (dvFiles.isEmpty) Map.empty
-    else dvRows(spark, dir, dvFiles).groupBy("__file").count()
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+  private def live(spark: SparkSession, scan: DataFrame,
+      dv: DvPlan): DataFrame =
+    if (dv.counts.isEmpty) scan else scan.filter(DvLive.column(spark, dv))
 
   /** Scan `files` under the recorded `schema`, minus any rows the
     * deletion vector lists — the DV-aware primitive every read path
-    * routes through. Both sides are [[scanFiles]] scans, so building
-    * the frame lists nothing and runs no job. Zero overhead when
-    * `dvFiles` is empty; otherwise one anti-join keyed (relative file,
-    * row position), where the DV side is deleted-rows-sized (broadcast
-    * by Spark's own size heuristics when small — the common case).
+    * routes through. Building the frame lists nothing and runs no
+    * job ([[scanFiles]]), and the DV applies as a row filter on
+    * (file, row position) inside the scan ([[DvLive]]), so a DV'd
+    * read runs exactly the jobs of a DV-free one. Zero overhead when
+    * `dv` holds no tombstones.
     */
   private def scanMinusDv(spark: SparkSession, dir: String,
       files: Seq[String], schema: org.apache.spark.sql.types.StructType,
-      dvFiles: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.functions._
+      dv: DvPlan): DataFrame = {
     // segments are written under PHYSICAL names (identical to logical
     // until a rename/drop activates mapping — see [[ColumnMapping]]);
     // the scan reads physical and re-projects to logical at the end
     val physS = ColumnMapping.physSchema(schema)
-    val base = scanFiles(spark, dir, files, physS)
-    val deDv =
-      if (dvFiles.isEmpty) base
-      else base
-        .withColumn("__file", relPathCol)
-        .withColumn("__pos", col("_metadata.row_index"))
-        .join(dvRows(spark, dir, dvFiles), Seq("__file", "__pos"), "left_anti")
-        .drop("__file", "__pos")
+    val deDv = live(spark, scanFiles(spark, dir, files, physS), dv)
     if (physS eq schema) deDv else deDv.toDF(schema.fieldNames: _*)
   }
 
@@ -1307,22 +1306,18 @@ object ManagedTable {
 
   /** The LIVE rows of `files` under logical names, each tagged with its
     * (`__file`, `__pos`) identity — the row image the DML paths
-    * evaluate predicates on. `_metadata` is tagged ON the scan, before
-    * the DV anti-join (metadata columns don't resolve through derived
-    * plans).
+    * evaluate predicates on. The DV filter and the tags both read
+    * `_metadata` straight off the scan ([[live]]).
     */
   private def taggedLive(spark: SparkSession, dir: String,
       files: Seq[String], schema: org.apache.spark.sql.types.StructType,
-      dvFiles: Seq[String]): DataFrame = {
+      dv: DvPlan): DataFrame = {
     import org.apache.spark.sql.functions.col
-    val tagged = scanFiles(spark, dir, files, ColumnMapping.physSchema(schema))
+    val tagged = live(spark,
+      scanFiles(spark, dir, files, ColumnMapping.physSchema(schema)), dv)
       .withColumn("__file", relPathCol)
       .withColumn("__pos", col("_metadata.row_index"))
-    val live =
-      if (dvFiles.isEmpty) tagged
-      else tagged.join(dvRows(spark, dir, dvFiles),
-        Seq("__file", "__pos"), "left_anti")
-    relogical(live, schema, Seq("__file", "__pos"))
+    relogical(tagged, schema, Seq("__file", "__pos"))
   }
 
   /** The tombstone side of a [[replaceWhere]]-shaped commit: the union
@@ -1342,7 +1337,8 @@ object ManagedTable {
     val candidates = predicateCandidates(files, stats, schema, predicate)
     val fresh: Option[DataFrame] =
       if (candidates.isEmpty) None
-      else Some(taggedLive(spark, dir, candidates, schema, dvFiles)
+      else Some(taggedLive(spark, dir, candidates, schema,
+        DvPlan.resolve(spark, dir, dvFiles))
         .filter(predicate).select("__file", "__pos"))
     if (fresh.isEmpty && dvFiles.isEmpty) return Seq.empty
     // cached: emptiness probe + DV write below share one tombstone scan
@@ -1365,9 +1361,10 @@ object ManagedTable {
     * small DV parquet segment, the new manifest carries the SAME data
     * files plus the DV reference, and every read path
     * ([[read]]/[[readCurrent]]/[[readWhere]]/[[merge]]/[[compact]]/
-    * [[changes]]) anti-joins the DV. THE point at 100 TB: deleting a
-    * few rows (GDPR erasure, bad-record retraction) from a table of
-    * multi-GB segments costs O(deleted rows) + one manifest write —
+    * [[changes]]) filters the DV's rows out inside its scan. THE
+    * point at 100 TB: deleting a few rows (GDPR erasure, bad-record
+    * retraction) from a table of multi-GB segments costs O(deleted
+    * rows) + one manifest write —
     * not a segment rewrite; [[compact]] later folds DVs into real
     * bytes. The DV is CUMULATIVE: each delete commit writes the union
     * of all live (file, pos) tombstones as one fresh segment and
@@ -1404,7 +1401,8 @@ object ManagedTable {
     // cached: the emptiness probe and the DV write below would each
     // re-run the full tombstone scan otherwise; the result is
     // deleted-rows-sized
-    val fresh = taggedLive(spark, dir, candidates, schema, dvFiles)
+    val fresh = taggedLive(spark, dir, candidates, schema,
+      DvPlan.resolve(spark, dir, dvFiles))
       .filter(predicate).select("__file", "__pos").cache()
     try {
       if (fresh.isEmpty) return current
@@ -2195,6 +2193,8 @@ object ManagedTable {
     val (_, currentAll, currentSchemaJ, currentStats) =
       readManifest(spark, dir, current)
     val (currentFiles, currentDv) = splitDv(currentAll)
+    // resolved once, for the discovery scan and the rewrite alike
+    lazy val currentDvPlan = DvPlan.resolve(spark, dir, currentDv)
     // the MANIFEST schema (its column mapping included) drives every
     // segment-facing read/write below
     val tableSchema = currentSchemaJ.map(schemaOf).getOrElse(
@@ -2237,7 +2237,7 @@ object ManagedTable {
     val affectedPaths =
       if (candidates.isEmpty) Set.empty[String]
       else {
-        taggedLive(spark, dir, candidates, tableSchema, currentDv)
+        taggedLive(spark, dir, candidates, tableSchema, currentDvPlan)
           .select((keys.map(col) :+ col("__file")): _*)
           .join(broadcast(changeKeys), keys, "left_semi")
           .select("__file").distinct()
@@ -2263,7 +2263,7 @@ object ManagedTable {
             ColumnMapping.strip(tableSchema)))
       // DV-aware: rewriting an affected file must not resurrect its
       // deletion-vectored rows
-      else scanMinusDv(spark, dir, affected, tableSchema, currentDv)
+      else scanMinusDv(spark, dir, affected, tableSchema, currentDvPlan)
     val merged = graft.operators.ApplyChanges.latestByKey(
       affectedRows.unionByName(changes, allowMissingColumns = true),
       keys, sequenceBy)
@@ -2390,7 +2390,8 @@ object ManagedTable {
         if (files.isEmpty)
           spark.createDataFrame(
             spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-        else scanMinusDv(spark, dir, files, schema, dv)
+        else scanMinusDv(spark, dir, files, schema,
+          DvPlan.resolve(spark, dir, dv))
       val have = schema.map(_.name).toSet
       // the explicit cast aligns a pre-widening side (narrower type)
       // to the to-version's type, exactly like the null-fill aligns a
@@ -2506,13 +2507,16 @@ object ManagedTable {
     // This is what keeps digests honest on hot deleteWhere tables:
     // digests are built at commit and a heavily-tombstoned file's
     // digest stays full of dead values (fail-open, so correct — but
-    // its effective fpp decays toward no-skipping). Cost is one
-    // tombstone-count aggregation over the DV parquet (deleted-rows-
-    // sized) plus the rewrite of exactly the triggered files. Files
-    // with no recorded row count are skipped (fraction unprovable).
+    // its effective fpp decays toward no-skipping). Cost is the
+    // resolved DV's per-file tombstone counts (no job under the inline
+    // cap) plus the rewrite of exactly the triggered files. Files with
+    // no recorded row count are skipped (fraction unprovable). The DV
+    // is resolved once, for this trigger, the rewrite scan and the
+    // carry-forward decision below.
+    lazy val dv = DvPlan.resolve(spark, dir, dvFiles)
     val dvHeavy: Seq[String] = rewriteDvFraction match {
       case Some(frac) if dvFiles.nonEmpty && frac > 0 =>
-        val tomb = dvCounts(spark, dir, dvFiles)
+        val tomb = dv.counts
         files.filter { rel =>
           val rows = stats.get(rel).flatMap(_.get(RowsStat))
             .flatMap(p => scala.util.Try(p._1.toLong).toOption)
@@ -2549,7 +2553,7 @@ object ManagedTable {
     // this is how DVs eventually become real bytes. Kept files carry
     // their DV entries forward; when nothing is kept the DV reference
     // is dropped entirely (all tombstones were materialized).
-    val packed0 = scanMinusDv(spark, dir, rewrite, schema, dvFiles)
+    val packed0 = scanMinusDv(spark, dir, rewrite, schema, dv)
     // clusterBy = Delta's OPTIMIZE ZORDER BY: instead of packing small
     // files in arrival order, GLOBALLY range-partition the packed rows
     // on the cluster key (pass a Morton-interleave expression for
@@ -2577,13 +2581,10 @@ object ManagedTable {
     // the DV reference is carried forward ONLY while some KEPT file
     // still has tombstones — rewritten files materialized theirs, so
     // once no kept file is tombstoned the DV is dropped and `detail`
-    // stops reporting DV presence (one distinct-files pass over the
-    // deleted-rows-sized DV parquet decides it)
-    val keepsTombstones = keep.nonEmpty && dvFiles.nonEmpty && {
-      val keepSet = keep.toSet
-      dvRows(spark, dir, dvFiles).select("__file").distinct()
-        .collect().exists(r => keepSet.contains(r.getString(0)))
-    }
+    // stops reporting DV presence (the resolved plan's per-file
+    // counts decide it)
+    val keepsTombstones = keep.nonEmpty && dvFiles.nonEmpty &&
+      keep.exists(dv.counts.contains)
     writeManifest(spark, dir, next, tag,
       keep ++ newFiles ++
         (if (keepsTombstones) dvFiles.map("dv:" + _) else Nil),
@@ -2762,7 +2763,8 @@ object ManagedTable {
       // rule as [[read]]: a pruned scan of a schema-evolved version
       // must null-fill the old segments' missing columns, not adopt
       // one file's footer. DV applied like every read path.
-      scanMinusDv(spark, dir, kept, schema, dvFiles).filter(pred)
+      scanMinusDv(spark, dir, kept, schema,
+        DvPlan.resolve(spark, dir, dvFiles)).filter(pred)
   }
 }
 

@@ -14,6 +14,15 @@ import graft.SparkSpec
   * (schema with nullability, rows) equal the `spark.read.parquet` scan
   * they replace, a cached read is found again by the next read of the
   * same version, and a listed file missing on disk fails the read.
+  *
+  * Deletion vectors apply inside the scan ([[DvLive]]) on both DV
+  * tiers: a DV'd read runs the jobs of a DV-free scan, with no join,
+  * and the inline and bulk tiers give the same rows. The oracle is
+  * [[listingRead]], which applies the DV with its own anti-join over
+  * `spark.read.parquet` and shares no code with the read paths — the
+  * connector and [[ManagedTable.read]] both resolve DVs through
+  * [[GraftDvReader.DvPlan]], so comparing them with each other
+  * (LifecycleFuzzSpec) cannot catch a resolver fault.
   */
 class ManifestScanSpec extends SparkSpec {
 
@@ -61,6 +70,14 @@ class ManifestScanSpec extends SparkSpec {
           .select("__file", "__pos"), Seq("__file", "__pos"), "left_anti")
         .drop("__file", "__pos")
     if (physS eq recorded) deDv else deDv.toDF(recorded.fieldNames: _*)
+  }
+
+  /** `body` with every DV on the bulk tier: positions resolved per
+    * file from the DV parquet, none inline.
+    */
+  private def onBulkTier[A](body: => A): A = {
+    spark.conf.set(GraftDvReader.InlineMaxRowsConf, "0")
+    try body finally spark.conf.unset(GraftDvReader.InlineMaxRowsConf)
   }
 
   private def assertSameAsListing(dir: String, v: Int): Unit = {
@@ -112,7 +129,7 @@ class ManifestScanSpec extends SparkSpec {
       "the DV is read under its fixed schema, with no inference job")
   }
 
-  test("schema and rows equal the listing scan: DV, evolved, renamed and empty versions") {
+  private def sameAsListingAcrossVersions(): Unit = {
     val dir = history("graft-mscan-same", 3)
     val dvV = ManagedTable.versions(spark, dir).last
     // schema evolution: old segments read null in the added column
@@ -134,6 +151,93 @@ class ManifestScanSpec extends SparkSpec {
     assert(ManagedTable.read(spark, dir, Some(appendedV))
       .filter(col("extra").isNull).count() == 3 * 5 - 10)
     assert(ManagedTable.read(spark, dir, Some(emptyV)).isEmpty)
+  }
+
+  test("schema and rows equal the listing scan: DV, evolved, renamed and empty versions") {
+    sameAsListingAcrossVersions()
+  }
+
+  test("schema and rows equal the listing scan on the bulk DV tier") {
+    onBulkTier(sameAsListingAcrossVersions())
+  }
+
+  /** deleteWhere → deleteWhere → merge → compact on a fresh table:
+    * whether the DV took the inline tier, then every version's rows
+    * (each checked against [[listingRead]]) and every consecutive
+    * change feed.
+    */
+  private def dvLifecycle(name: String): (Boolean, Seq[Seq[String]]) = {
+    val dir = Files.createTempDirectory(name).toString
+    val seqSchema = StructType(schema.fields :+ StructField("seq", LongType))
+    def batch(ids: Seq[Long], tag: String, seq: Long): DataFrame =
+      spark.createDataFrame(spark.sparkContext.parallelize(
+        ids.map(i => Row(i, s"$tag$i", seq)), 1), seqSchema)
+    (0 until 4).foreach(i =>
+      ManagedTable.appendCommit(batch(i * 10L until i * 10L + 10, "r", 0), dir))
+    ManagedTable.deleteWhere(spark, dir, col("id").between(3, 7))
+    ManagedTable.deleteWhere(spark, dir, col("id") % 5 === 1)
+    val (_, dvAll, _, _) = ManagedTable.readManifest(spark, dir,
+      ManagedTable.versions(spark, dir).last)
+    val plan = GraftDvReader.DvPlan.resolve(spark, dir,
+      ManagedTable.splitDv(dvAll)._2)
+    assert(plan.counts.values.sum == 5 + 7, plan)
+    // the merge rewrites ids 2, 12 and 25's files DV-aware and adds 40
+    ManagedTable.merge(batch(Seq(2L, 12L, 25L, 40L), "m", 1), dir,
+      keys = Seq("id"), sequenceBy = Seq(col("seq")))
+    ManagedTable.compact(spark, dir, smallFileBytes = 64L * 1024 * 1024)
+    val vs = ManagedTable.versions(spark, dir)
+    vs.foreach(assertSameAsListing(dir, _))
+    def sorted(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    (plan.inline.isDefined,
+      vs.map(v => sorted(ManagedTable.read(spark, dir, Some(v)))) ++
+        vs.zip(vs.tail).map { case (a, b) =>
+          sorted(ManagedTable.changes(spark, dir, a, b, keys = Seq("id")))
+        })
+  }
+
+  test("deleteWhere, deleteWhere, merge, compact and changes agree on both DV tiers") {
+    val (inlineTier, inline) = dvLifecycle("graft-mscan-tier-inline")
+    val (bulkTier, bulk) = onBulkTier(dvLifecycle("graft-mscan-tier-bulk"))
+    assert(inlineTier && !bulkTier)
+    // the feeds of the second delete, the merge and the compaction
+    val Seq(delete2, merged, compacted) = inline.takeRight(3)
+    assert(delete2.size == 7 && delete2.forall(_.contains("delete")))
+    assert(merged.count(_.contains("update_postimage")) == 3 &&
+      merged.count(_.contains("insert")) == 1, merged)
+    assert(compacted.isEmpty, "compaction changes no row")
+    assert(bulk == inline)
+  }
+
+  test("a DV'd head read runs the jobs of a DV-free scan, with no join or broadcast") {
+    val dir = history("graft-mscan-nojoin", 38)
+    val (_, all, schemaJson, _) = ManagedTable.readManifest(spark, dir,
+      ManagedTable.versions(spark, dir).last)
+    val (files, dv) = ManagedTable.splitDv(all)
+    assert(dv.nonEmpty)
+    def agg(df: DataFrame) = df.agg(count(lit(1)), sum("id"))
+    var dvRead: DataFrame = null
+    assert(jobsDuring { dvRead = agg(ManagedTable.read(spark, dir)) } == 0)
+    val plain = agg(ManagedTable.scanFiles(spark, dir, files,
+      ManagedTable.schemaOf(schemaJson.get)))
+    var got: Row = null
+    val dvJobs = jobsDuring { got = dvRead.collect().head }
+    val plainJobs = jobsDuring { plain.collect(); () }
+    assert(dvJobs == plainJobs, s"DV'd read $dvJobs jobs, plain $plainJobs")
+    assert(got.getLong(0) == 38 * 5 - 10 &&
+      got.getLong(1) == (0L until 38 * 5).sum - (3L to 12L).sum)
+    val executed = dvRead.queryExecution.executedPlan.toString
+    assert(!executed.contains("Join") &&
+      !executed.contains("BroadcastExchange"), executed)
+  }
+
+  test("planning a connector scan of a DV'd version under the inline cap starts no Spark job") {
+    val dir = history("graft-mscan-connector", 3)
+    var df: DataFrame = null
+    assert(jobsDuring {
+      df = spark.read.format("graft").load(dir)
+      df.queryExecution.executedPlan; ()
+    } == 0)
+    assert(df.count() == 3 * 5 - 10)
   }
 
   test("a cached read is found by the next read of the same version") {

@@ -22,7 +22,8 @@ says the host was quiet when it was taken:
   - wall_total / value <= 1.15            (rerun overhead small: few
     suite-neighborhood phantoms fired)
   - global_shift is not set               (the suite-wide >2x regime
-    is by definition not a reference measurement)
+    is by definition not a reference measurement; Bench reports it as
+    null when the profile it ran against came from another host)
 
 Runs without a host block (pre-round-15 artifacts) FAIL the gate —
 re-measure rather than grandfather unknown conditions. `--force`
@@ -31,6 +32,11 @@ overrides for explicitly-reasoned cases and prints what it overrode.
 Usage:
     python3 tools/make_bench_profile.py run1.json [run2.json ...] \
         [-o bench_profile.json] [--force]
+
+HOST: the profile records the "ncpu" of the host its runs were taken
+on (Bench reads only the q... keys as timings, and compares "ncpu"
+with its own host). Inputs from hosts with different cpu counts are
+refused, --force or not: a median across hosts describes neither.
 
 Each input is a bench_latest.json-style line ({"queries": {...}, ...}).
 The profile value per query is the MEDIAN across runs (the advisor's
@@ -86,6 +92,7 @@ def main() -> int:
     args = ap.parse_args()
 
     samples: dict[str, list[float]] = {}
+    ncpus: dict[str, object] = {}
     gated_out = 0
     for path in args.runs:
         with open(path) as f:
@@ -104,10 +111,17 @@ def main() -> int:
             if not args.force:
                 gated_out += 1
                 continue
+        ncpus[path] = (data.get("host") or {}).get("ncpu")
         for q, t in queries.items():
             if t is None or t < 0:
                 continue
             samples.setdefault(q, []).append(float(t))
+    if len(set(ncpus.values())) > 1:
+        print("error: the inputs come from hosts with different cpu "
+              "counts — profile one host at a time:", file=sys.stderr)
+        for path, n in ncpus.items():
+            print(f"  - {path}: ncpu {n}", file=sys.stderr)
+        return 1
     prof = {q: statistics.median(ts) for q, ts in samples.items()}
 
     if not prof:
@@ -119,11 +133,12 @@ def main() -> int:
             print("error: no per-query data in any input", file=sys.stderr)
         return 1
 
+    ncpu = next(iter(ncpus.values()))
     with open(args.out, "w") as f:
-        json.dump(dict(sorted(prof.items())), f, indent=0, sort_keys=True)
+        json.dump({"ncpu": ncpu, **prof}, f, indent=0, sort_keys=True)
         f.write("\n")
     print(f"wrote {args.out}: {len(prof)} queries, "
-          f"total {sum(prof.values()):.1f}s")
+          f"total {sum(prof.values()):.1f}s, ncpu {ncpu}")
     return 0
 
 
