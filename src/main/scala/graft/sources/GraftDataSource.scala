@@ -6,6 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
 import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.parquet.hadoop.api.ReadSupport
@@ -1876,9 +1877,7 @@ private[sources] object GraftDvReader {
       conf: Configuration): Option[Map[String, Array[Long]]] = {
     val files = scala.collection.mutable.ArrayBuffer.empty[ParquetFileReader]
     try {
-      refs.foreach(p => files += ParquetFileReader.open(
-        HadoopInputFile.fromPath(new HPath(p), conf),
-        org.apache.parquet.HadoopReadOptions.builder(conf).build()))
+      refs.foreach(p => files += openFile(p, conf))
       if (files.map(_.getRecordCount).sum > cap) None
       else {
         val byFile = scala.collection.mutable.HashMap
@@ -1931,7 +1930,7 @@ private[sources] object GraftDvReader {
       Binary.fromString(relFile))
     val buf = scala.collection.mutable.ArrayBuffer.empty[Long]
     dvRefs.foreach { path =>
-      val r = dvReader(path, conf, FilterCompat.get(pred))
+      val r = groupReader(path, conf, FilterCompat.get(pred))
       try {
         var g = r.read()
         while (g != null) {
@@ -1943,14 +1942,26 @@ private[sources] object GraftDvReader {
     sortedUnique(buf.toArray)
   }
 
-  /** A row reader of one DV file under `conf`. It is built from a
-    * `HadoopInputFile`, so parquet-mr takes its read options from
-    * `conf`: the `Path` builder first makes a `new Configuration()`
-    * and parses the Hadoop default resources for it — 14 ms per open,
-    * against the microseconds the DV's rows take.
+  /** A footer reader of one parquet file under `conf`. Passing the
+    * read options keeps parquet-mr from building its defaults over a
+    * `new Configuration()`, which parses the Hadoop default resources
+    * on every open (14 ms each).
     */
-  private def dvReader(path: String, conf: Configuration,
-      filter: FilterCompat.Filter): ParquetReader[Group] =
+  private[sources] def openFile(path: String,
+      conf: Configuration): ParquetFileReader =
+    ParquetFileReader.open(HadoopInputFile.fromPath(new HPath(path), conf),
+      HadoopReadOptions.builder(conf).build())
+
+  /** A row reader of one parquet file (a DV, or a data file for
+    * [[GraftPartitionReader]]) under `conf`. It is built from a
+    * `HadoopInputFile`, so parquet-mr takes its read options — the
+    * read schema included — from `conf`: the `Path` builder first
+    * makes a `new Configuration()` and parses the Hadoop default
+    * resources for it, 14 ms per open, against the microseconds a
+    * DV's rows take.
+    */
+  private[sources] def groupReader(path: String, conf: Configuration,
+      filter: FilterCompat.Filter = FilterCompat.NOOP): ParquetReader[Group] =
     new ParquetReader.Builder[Group](
         HadoopInputFile.fromPath(new HPath(path), conf)) {
       override protected def getReadSupport(): ReadSupport[Group] =
@@ -2194,8 +2205,7 @@ private[sources] class GraftColumnarPartitionReader(absPath: String,
   private val Capacity = 4096
 
   private val fileSchema: MessageType = {
-    val fr = ParquetFileReader.open(
-      HadoopInputFile.fromPath(new HPath(absPath), baseConf))
+    val fr = GraftDvReader.openFile(absPath, baseConf)
     try fr.getFooter.getFileMetaData.getSchema finally fr.close()
   }
   private val present: Array[StructField] =
@@ -2529,10 +2539,9 @@ private[sources] class GraftPartitionReader(absPath: String,
   // CLONE before mutating: baseConf may be the factory's shared
   // session conf, and this reader sets a per-file read schema on it
   private val conf = new Configuration(baseConf)
-  private val hPath = new HPath(absPath)
 
   private val fileSchema: MessageType = {
-    val fr = ParquetFileReader.open(HadoopInputFile.fromPath(hPath, conf))
+    val fr = GraftDvReader.openFile(absPath, conf)
     try fr.getFooter.getFileMetaData.getSchema finally fr.close()
   }
 
@@ -2540,8 +2549,7 @@ private[sources] class GraftPartitionReader(absPath: String,
 
   private val reader: ParquetReader[Group] = {
     conf.set(ReadSupport.PARQUET_READ_SCHEMA, decoder.proj.toString)
-    ParquetReader.builder(new GroupReadSupport(), hPath)
-      .withConf(conf).build()
+    GraftDvReader.groupReader(absPath, conf)
   }
 
   private var pos: Long = -1L
@@ -2592,8 +2600,7 @@ private[sources] class GraftPositionalReader(absPath: String,
     s"graft positional read: emit positions not strictly increasing " +
       s"for $absPath")
 
-  private val fileReader = ParquetFileReader.open(
-    HadoopInputFile.fromPath(new HPath(absPath), conf))
+  private val fileReader = GraftDvReader.openFile(absPath, conf)
   private val fileSchema: MessageType =
     fileReader.getFooter.getFileMetaData.getSchema
   private val decoder = new GroupDecoder(absPath, required, fileSchema)

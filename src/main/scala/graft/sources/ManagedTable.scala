@@ -734,9 +734,6 @@ object ManagedTable {
     */
   private[sources] def footerStats(spark: SparkSession, dir: String,
       relFiles: Seq[String]): Option[FileStats] = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.io.InputFile
-    import org.apache.parquet.hadoop.util.HadoopInputFile
     import org.apache.parquet.schema.{LogicalTypeAnnotation => L,
       PrimitiveType}
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
@@ -787,9 +784,7 @@ object ManagedTable {
         expectSchema: org.apache.parquet.schema.MessageType)
         : (org.apache.parquet.schema.MessageType,
            Map[String, (String, String)]) = {
-      val in: InputFile = HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(s"$dir/$rel"), conf)
-      val r = ParquetFileReader.open(in)
+      val r = GraftDvReader.openFile(s"$dir/$rel", conf)
       try {
         val md = r.getFooter
         val schema = md.getFileMetaData.getSchema
@@ -2122,11 +2117,19 @@ object ManagedTable {
     * (reference: notebooks/03_Data_Ingestion.py:318-326), re-expressed
     * on the manifest log:
     *
-    *   1. plan: semi-join the CURRENT version's rows (tagged with
-    *      `_metadata.file_path`) against the changeset's distinct keys —
-    *      only files that CONTAIN a changed key are affected; the
-    *      file-path list that comes back to the driver is manifest-scale
-    *      metadata, exactly what Delta's MERGE collects;
+    *   1. plan: one job takes the changeset's key bounds, and the
+    *      manifest's per-file stats prune the current files to the
+    *      candidates those bounds overlap. A lone candidate is taken
+    *      as affected outright: the rewrite reads it anyway, so a
+    *      discovery scan would only repeat that read. With two or
+    *      more, discovery semi-joins their live rows (tagged with
+    *      `_metadata.file_path`) against the changeset's keys — only
+    *      files that CONTAIN a changed key are affected; the file-path
+    *      list that comes back to the driver is manifest-scale
+    *      metadata, exactly what Delta's MERGE collects. The trade-off
+    *      of the lone-candidate rule: when that file holds none of the
+    *      changed keys it is rewritten (same rows, new segment) rather
+    *      than reused by reference — the result stays exact;
     *   2. rewrite: latest-per-key (partial-agg `max_by`, same engine as
     *      [[graft.operators.ApplyChanges.latestByKey]]) over ONLY
     *      (affected-file rows ∪ changeset) lands as a fresh segment;
@@ -2150,7 +2153,9 @@ object ManagedTable {
     * be present.
     *
     * At 100 TB: the semi-join is a broadcast of the changeset's keys
-    * against a manifest-planned scan, shuffle is proportional to
+    * against a manifest-planned scan of the candidates only (the key
+    * projection is not cached, so the broadcast re-evaluates it from
+    * the changeset), shuffle is proportional to
     * |affected rows| + |changes| (not table size), and unaffected
     * segments move by manifest reference only.
     *
@@ -2201,26 +2206,21 @@ object ManagedTable {
       throw new IllegalStateException(
         s"ManagedTable.merge: version $current of $dir has no recorded schema"))
     // step 1: which files contain a changed key? (file paths only —
-    // driver-side metadata, same scale as the manifest itself). The DV
-    // is applied before the semi-join: a file whose only changed-key
-    // rows are all tombstoned needs no rewrite.
-    // cached: the key frame feeds the bounds agg AND the discovery
-    // semi-join broadcast — and it is the COLUMN-PRUNED projection of
-    // the changeset (caching the full-width changeset instead would
-    // force one full materialization of wide payload columns the
-    // write is the only consumer of)
-    val changeKeys = changes.select(keys.map(col): _*).distinct().cache()
-    try {
-    // candidate pruning BEFORE the discovery scan: a file whose
+    // driver-side metadata, same scale as the manifest itself). The
+    // key frame is the plain column projection of the changeset: no
+    // distinct, no cache — neither min/max nor a left-semi join
+    // depends on duplicate keys, and each consumer below reads it once.
+    val changeKeys = changes.select(keys.map(col): _*)
+    // candidate pruning BEFORE any discovery scan: a file whose
     // recorded per-column [min, max] is provably disjoint from the
-    // changeset's key bounds cannot hold an affected key, so the
-    // semi-join scan below opens only the overlapping files — on a
+    // changeset's key bounds cannot hold an affected key — on a
     // clustered table the discovery cost is O(files overlapping the
     // changeset), never a full-table scan per merge tick. The bounds
-    // agg is one tiny job on the (cached) changeset. Null keys never
-    // equi-match (the semi-join is null-unsafe), so bounds over the
-    // NON-null values cover every matchable key — and a key column
-    // that is entirely null in the changeset can match nothing at all.
+    // agg is the one job of this step when at most one file survives.
+    // Null keys never equi-match (the semi-join is null-unsafe), so
+    // bounds over the NON-null values cover every matchable key — and
+    // a key column that is entirely null in the changeset can match
+    // nothing at all.
     val candidates =
       if (currentFiles.isEmpty) Seq.empty[String]
       else {
@@ -2234,8 +2234,12 @@ object ManagedTable {
             keys.zipWithIndex.map { case (k, i) =>
               (k, Option(b.get(2 * i)), Option(b.get(2 * i + 1))) })
       }
+    // a lone candidate is affected without a discovery scan (see the
+    // scaladoc's trade-off). With several, the DV is applied before
+    // the semi-join: a file whose only changed-key rows are all
+    // tombstoned needs no rewrite.
     val affectedPaths =
-      if (candidates.isEmpty) Set.empty[String]
+      if (candidates.size <= 1) candidates.toSet
       else {
         taggedLive(spark, dir, candidates, tableSchema, currentDvPlan)
           .select((keys.map(col) :+ col("__file")): _*)
@@ -2292,7 +2296,6 @@ object ManagedTable {
         segmentStats(spark, dir, newFiles,
           propertiesOf(currentStats), Some(mergedSchema)))
     next
-    } finally { changeKeys.unpersist(); () }
   }
 
   /** The user-facing state of a [[merge]]-maintained table: the winning

@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -19,6 +23,34 @@ trait SparkSpec extends AnyFunSuite {
   }
 
   def sf(name: String): String = s"/root/testdata/$name"
+
+  /** Spark jobs started by `body` on this thread, counted by a
+    * listener; a marker job after `body` proves every earlier job-start
+    * event has been delivered before the count is read.
+    */
+  def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"jobs-during-${System.nanoTime()}"
+    val started = new AtomicInteger
+    val markerSeen = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => started.incrementAndGet(); ()
+          case Some(g) if g == s"$group-marker" => markerSeen.countDown()
+          case _ => ()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "build")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(s"$group-marker", "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(markerSeen.await(60, TimeUnit.SECONDS), "marker job not seen")
+      started.get
+    } finally sc.removeSparkListener(listener)
+  }
 
   /** Test-owned checkpoint dir, under a root SEPARATE from the
     * `/tmp/graft-ckpt` that Verify/Bench sweep at startup — a

@@ -167,6 +167,85 @@ class ManagedTableSpec extends SparkSpec {
       .toSeq.filter(_.nonEmpty).map(_.trim.stripPrefix("\"").stripSuffix("\""))
   }
 
+  /** A table of one file per population, one append each: at the
+    * head version `pops.size`, file i holds exactly the rows of
+    * `pops(i)`.
+    */
+  private def tableOfFiles(name: String,
+      pops: Seq[Seq[(Long, String, Long)]]): (String, Seq[String]) = {
+    import spark.implicits._
+    val dir = Files.createTempDirectory(name).toString
+    pops.foreach(rows =>
+      ManagedTable.appendCommit(rows.toDF("k", "p", "seq").coalesce(1), dir))
+    val files = filesOf(dir, pops.size)
+    assert(files.size == pops.size)
+    (dir, files)
+  }
+
+  /** The key model of a merged table: latest `(p, seq)` per key, with
+    * op "d" removing the key.
+    */
+  private def assertCurrent(dir: String,
+      want: Map[Long, (String, Long)]): Unit = {
+    val got = ManagedTable.readCurrent(spark, dir,
+        deleteExpr = col("op") === "d", exceptColumns = Seq("op"))
+      .select("k", "p", "seq").collect()
+      .map(r => r.getLong(0) -> (r.getString(1), r.getLong(2))).toMap
+    assert(got == want)
+  }
+
+  test("merge with one stats candidate skips discovery: an update runs at most 4 Spark jobs") {
+    import spark.implicits._
+    val low = (0L until 50L).map(k => (k, s"a$k", 1L))
+    val high = (100L until 150L).map(k => (k, s"b$k", 1L))
+    val (dir, files) = tableOfFiles("graft-mt-jobs", Seq(low, high))
+    val changes = Seq((120L, "changed", 2L, "u")).toDF("k", "p", "seq", "op")
+    // the bounds agg and the rewrite; no cached key frame and no
+    // discovery scan for the lone candidate (with both, this merge ran 8)
+    val jobs = jobsDuring {
+      ManagedTable.merge(changes, dir, Seq("k"), Seq(col("seq"))); ()
+    }
+    assert(jobs <= 4, s"single-candidate merge ran $jobs jobs")
+    val v3 = filesOf(dir, 3)
+    assert(v3.contains(files(0)) && !v3.contains(files(1)))
+    assertCurrent(dir, ((low ++ high).map { case (k, p, s) => k -> (p, s) }
+      .toMap + (120L -> ("changed", 2L))))
+  }
+
+  test("merge with one stats candidate holding no changed key rewrites it and stays exact") {
+    import spark.implicits._
+    // evens in [0, 98] and [200, 298]: the changeset's odd keys fall in
+    // the first file's stats range but are absent from it
+    val a = (0L until 100L by 2).map(k => (k, s"a$k", 1L))
+    val b = (200L until 300L by 2).map(k => (k, s"b$k", 1L))
+    val (dir, files) = tableOfFiles("graft-mt-nohit", Seq(a, b))
+    val changes = Seq((11L, "new", 2L, "u"), (13L, "gone", 3L, "d"))
+      .toDF("k", "p", "seq", "op")
+    ManagedTable.merge(changes, dir, Seq("k"), Seq(col("seq")))
+    val v3 = filesOf(dir, 3)
+    // the documented trade-off: the lone candidate is rewritten, the
+    // file outside the bounds is reused by reference
+    assert(!v3.contains(files(0)) && v3.contains(files(1)))
+    assertCurrent(dir, (a ++ b).map { case (k, p, s) => k -> (p, s) }
+      .toMap + (11L -> ("new", 2L)))
+  }
+
+  test("merge with two overlapping candidates reuses the one without a changed key") {
+    import spark.implicits._
+    // evens and odds over the same range: both files overlap the
+    // changeset's bounds, only the evens file holds its keys
+    val evens = (0L until 100L by 2).map(k => (k, s"e$k", 1L))
+    val odds = (1L until 100L by 2).map(k => (k, s"o$k", 1L))
+    val (dir, files) = tableOfFiles("graft-mt-disc", Seq(evens, odds))
+    ManagedTable.merge(Seq((10L, "changed", 2L, "u"), (40L, "", 3L, "d"))
+        .toDF("k", "p", "seq", "op"),
+      dir, Seq("k"), Seq(col("seq")))
+    val v3 = filesOf(dir, 3)
+    assert(!v3.contains(files(0)) && v3.contains(files(1)))
+    assertCurrent(dir, ((evens ++ odds).map { case (k, p, s) => k -> (p, s) }
+      .toMap + (10L -> ("changed", 2L)) - 40L))
+  }
+
   test("data skipping: range reads plan only stats-matching files; results equal the unpruned filter") {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft-mt9").toString

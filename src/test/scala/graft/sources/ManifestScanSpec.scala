@@ -1,9 +1,6 @@
 package graft.sources
 
 import java.nio.file.Files
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -86,34 +83,6 @@ class ManifestScanSpec extends SparkSpec {
     assert(got.schema == want.schema, s"v$v schema")
     assert(got.collect().map(_.toString).sorted.toSeq ==
       want.collect().map(_.toString).sorted.toSeq, s"v$v rows")
-  }
-
-  /** Spark jobs started by `body` on this thread, counted by a
-    * listener; a marker job after `body` proves every earlier job-start
-    * event has been delivered before the count is read.
-    */
-  private def jobsDuring(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"manifest-scan-${System.nanoTime()}"
-    val started = new AtomicInteger
-    val markerSeen = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`group`) => started.incrementAndGet(); ()
-          case Some(g) if g == s"$group-marker" => markerSeen.countDown()
-          case _ => ()
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "build")
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup(s"$group-marker", "marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(markerSeen.await(60, TimeUnit.SECONDS), "marker job not seen")
-      started.get
-    } finally sc.removeSparkListener(listener)
   }
 
   test("building a read over 40+ files with a deletion vector starts no Spark job") {
