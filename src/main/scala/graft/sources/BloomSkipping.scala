@@ -9,12 +9,7 @@ import scala.util.control.NonFatal
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.functions.{when, xxhash64}
-import org.apache.spark.sql.graftshim.ColumnBridge
+import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -40,20 +35,17 @@ import org.apache.spark.unsafe.types.UTF8String
   *     `__bf:<physical col>` — the same sidecar discipline as
   *     deletion vectors. Segments are immutable and swept whole, so
   *     vacuum/compaction GC the digests with their segment for free.
-  *   - BUILT IN THE STATS PASS, not a pass of its own:
-  *     [[BloomDigestAgg]] rides the SAME grouped aggregation that
-  *     computes per-file min/max/counts ([[ManagedTable
-  *     .segmentStats]]), so a digested table pays ONE extra read of
-  *     the new segment per commit — exactly what an undigested table
-  *     already pays. Values hash to 64-bit on the executors
-  *     (`xxhash64`, Spark's codegen'd expression); the shuffle moves
-  *     longs; each group's task writes its own sidecar. No driver
-  *     collect of values or digest bytes, ever — the driver sees one
-  *     tiny (file, column, path) cell per digest.
+  *   - BUILT BY THE WRITER, not a pass of its own: the task that
+  *     writes a file folds each digest column's value hashes as the
+  *     rows stream by ([[WriteStats]]) and writes the file's sidecar
+  *     when it closes the file, so a digested table pays no extra read
+  *     or Spark job per commit. Values hash to 64-bit on the executors;
+  *     the driver sees one tiny (file, column, path) cell per digest
+  *     in the commit message, never values or digest bytes.
   *   - PROBE PARITY BY CONSTRUCTION: the probe hashes the SAME
   *     canonical string render through the SAME function
-  *     ([[XXH64.hashUTF8String]], seed 42) that `xxhash64(cast(c as
-  *     string))` applied at build, so a present value can never be
+  *     ([[XXH64.hashUTF8String]], seed 42) that the write applied to
+  *     the value's string render, so a present value can never be
   *     missed (false negatives impossible, false positives only make
   *     pruning weaker). Eligible columns are restricted to the types
   *     whose string render is canonical on both sides: integrals and
@@ -94,8 +86,8 @@ object BloomSkipping {
   /** Types whose recorded render is canonical and identical between
     * the build side and the probe side: integrals and strings
     * verbatim, date/timestamp through their internal numerics (the
-    * stats pass digests `unix_date`/`unix_micros` and probes convert
-    * the same way — [[graft.sources.GraftScan.renderStatsValue]]).
+    * writer digests epoch days / epoch micros and probes convert the
+    * same way — [[graft.sources.GraftScan.renderStatsValue]]).
     * Floats/decimals are excluded — `5.10` vs `5.1` would silently
     * break the no-false-negative contract.
     */
@@ -108,17 +100,6 @@ object BloomSkipping {
   private[sources] def fppOf(props: Map[String, String]): Double =
     props.get(FppProp).flatMap(s => scala.util.Try(s.toDouble).toOption)
       .filter(p => p > 0 && p < 1).getOrElse(0.01)
-
-  /** The digest aggregate as a Column over a data column: hash to
-    * 64-bit FIRST (codegen'd, null-safe — nulls stay null and are
-    * skipped), aggregate the distinct hashes, emit the full sidecar
-    * payload. Rides any groupBy.
-    */
-  private[sources] def digestColumn(c: Column, fpp: Double): Column =
-    ColumnBridge.column(BloomDigestAgg(
-      ColumnBridge.expression(
-        when(c.isNotNull, xxhash64(c.cast("string")))),
-      fpp).toAggregateExpression())
 
   /** May the digested (file, column) contain `value`? TRUE on any
     * uncertainty — foreign scheme, unreadable sidecar, IO error, or an
@@ -187,6 +168,18 @@ object BloomSkipping {
 
   private val Magic = 0x47424631 // "GBF1"
 
+  /** The sidecar payload of one (file, column) digest over the value
+    * hashes `hashes`, sized to their distinct count at `fpp`.
+    */
+  private[sources] def digestPayload(hashes: java.util.Set[java.lang.Long],
+      fpp: Double): Array[Byte] = {
+    val (k, mBits) = sizeFor(hashes.size(), fpp)
+    val words = new Array[Long]((mBits >>> 6).toInt)
+    val it = hashes.iterator()
+    while (it.hasNext) insert(words, mBits, k, it.next().longValue())
+    payload(k, mBits, words)
+  }
+
   /** Render a digest as its sidecar payload. */
   private def payload(k: Int, mBits: Long, words: Array[Long])
       : Array[Byte] = {
@@ -197,13 +190,13 @@ object BloomSkipping {
     bb.array()
   }
 
-  /** Executor-side sidecar write of an [[BloomDigestAgg]] payload;
+  /** Executor-side sidecar write of a [[digestPayload]];
     * overwrite=true makes task retries idempotent (content is
     * deterministic for a given file+column). The caller threads the
     * SESSION's Hadoop configuration in (serialized into the closure) —
     * a bare `new Configuration()` would drop object-store credentials
     * and filesystem overrides, and unlike the probe side this path is
-    * NOT fail-open: a failed sidecar write fails the stats job.
+    * NOT fail-open: a failed sidecar write fails the write task.
     */
   private[sources] def writeSidecarBytes(abs: String,
       bytes: Array[Byte], conf: Configuration): Unit = {
@@ -322,79 +315,5 @@ object BloomSkipping {
       }
     }
     Some(loaded)
-  }
-
-  /** Per-group Bloom digest aggregate: buffers the DISTINCT 64-bit
-    * hashes (so digest bits are sized per distinct value, and
-    * duplicates cost a set probe), then at eval sizes the filter to
-    * the observed distinct count at `fpp` and emits the full sidecar
-    * payload. Mergeable (set union), so it rides partial aggregation
-    * like any built-in — the map side pre-dedups before the shuffle.
-    * Buffer memory is 8 bytes per distinct value per in-flight group,
-    * bounded by the write's file-target sizing (the same rows are
-    * being held by the min/max agg next to it).
-    */
-  private[sources] case class BloomDigestAgg(
-      child: Expression,
-      fpp: Double,
-      mutableAggBufferOffset: Int = 0,
-      inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[java.util.HashSet[java.lang.Long]] {
-
-    override def children: Seq[Expression] = Seq(child)
-    override def nullable: Boolean = false
-    override def dataType: DataType = BinaryType
-    override def prettyName: String = "graft_bloom_digest"
-
-    override def createAggregationBuffer(): java.util.HashSet[java.lang.Long] =
-      new java.util.HashSet[java.lang.Long]()
-
-    override def update(buf: java.util.HashSet[java.lang.Long],
-        input: InternalRow): java.util.HashSet[java.lang.Long] = {
-      val v = child.eval(input)
-      if (v != null) { buf.add(v.asInstanceOf[Long]); () }
-      buf
-    }
-
-    override def merge(buf: java.util.HashSet[java.lang.Long],
-        other: java.util.HashSet[java.lang.Long])
-        : java.util.HashSet[java.lang.Long] = {
-      buf.addAll(other); buf
-    }
-
-    override def eval(buf: java.util.HashSet[java.lang.Long]): Any = {
-      val (k, mBits) = sizeFor(buf.size(), fpp)
-      val words = new Array[Long]((mBits >>> 6).toInt)
-      val it = buf.iterator()
-      while (it.hasNext) insert(words, mBits, k, it.next().longValue())
-      payload(k, mBits, words)
-    }
-
-    override def serialize(buf: java.util.HashSet[java.lang.Long])
-        : Array[Byte] = {
-      val bb = ByteBuffer.allocate(4 + 8 * buf.size())
-      bb.putInt(buf.size())
-      val it = buf.iterator()
-      while (it.hasNext) bb.putLong(it.next().longValue())
-      bb.array()
-    }
-
-    override def deserialize(bytes: Array[Byte])
-        : java.util.HashSet[java.lang.Long] = {
-      val bb = ByteBuffer.wrap(bytes)
-      val n = bb.getInt()
-      val buf = createAggregationBuffer()
-      var i = 0
-      while (i < n) { buf.add(bb.getLong()); i += 1 }
-      buf
-    }
-
-    override def withNewMutableAggBufferOffset(newOffset: Int): BloomDigestAgg =
-      copy(mutableAggBufferOffset = newOffset)
-    override def withNewInputAggBufferOffset(newOffset: Int): BloomDigestAgg =
-      copy(inputAggBufferOffset = newOffset)
-    override protected def withNewChildrenInternal(
-        newChildren: IndexedSeq[Expression]): BloomDigestAgg =
-      copy(child = newChildren.head)
   }
 }

@@ -1300,7 +1300,7 @@ private[sources] object GraftScan {
   def runtimePrunable(dt: DataType): Boolean = dt match {
     case LongType | IntegerType | ShortType | ByteType | StringType => true
     // date/timestamp stats are recorded as epoch-day / epoch-micro
-    // NUMERIC strings ([[ManagedTable.segmentStats]]) and runtime
+    // NUMERIC strings ([[WriteStats]]) and runtime
     // literals arrive as the same internal numerics — no calendar
     // rendering on either side, so no timezone/format hazard
     case DateType | TimestampType => true
@@ -1311,7 +1311,7 @@ private[sources] object GraftScan {
     * types convert to the same epoch-day / epoch-micro numerics the
     * manifest records (timezone-free, format-free — the canonical
     * render a probe and a digest must agree on); everything else is
-    * the plain string render the stats pass used.
+    * the plain string render the writer records.
     */
   def renderStatsValue(v: Any): String = v match {
     case t: java.sql.Timestamp =>
@@ -2816,10 +2816,11 @@ private[sources] object GraftPartitionReader {
   *
   * Appends to an existing table must match its schema by name AND
   * type ([[ManagedTable]]'s own append discipline — evolution goes
-  * through `merge`); overwrite records the new schema. Per-file
-  * min/max stats are computed by the same [[ManagedTable
-  * .segmentStats]] pass every other writer uses, so connector-written
-  * segments prune identically.
+  * through `merge`); overwrite records the new schema. Each task
+  * folds its file's manifest stats and Bloom digests as it writes the
+  * rows ([[WriteStats]], the fold [[ManagedTable]]'s writer uses too)
+  * and returns them in its [[GraftWriteCommit]], so connector-written
+  * segments prune identically and the commit reads nothing back.
   */
 private[sources] class GraftWriteBuilder(dir: String,
     info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
@@ -3045,19 +3046,15 @@ private[sources] class GraftStreamingWrite(dir: String,
 
   override def createStreamingWriterFactory(info: PhysicalWriteInfo)
       : org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory =
-    new GraftStreamingWriterFactory(dir, segment,
-      GraftBatchWrite.writerSchema(dir, schema,
-        truncateFirst = false).json,
-      GraftDvReader.sessionConfSer())
+    new GraftStreamingWriterFactory(segment,
+      GraftBatchWrite.writeStats(dir, schema, truncateFirst = false))
 
   override def commit(epochId: Long,
       messages: Array[WriterCommitMessage]): Unit = {
     val spark = SparkSession.active
     val tag = s"b$epochId"
-    val newFiles = messages.flatMap {
-      case GraftWriteCommit(fs) => fs
-      case _ => Nil
-    }.toSeq.sorted
+    val newStats = GraftWriteCommit.stats(messages)
+    val newFiles = newStats.keys.toSeq.sorted
     if (ManagedTable.committedTagSet(spark, dir).contains(tag)) {
       // replayed epoch: the ORIGINAL attempt's commit is the one the
       // manifest references — this attempt's staged files are dead
@@ -3066,9 +3063,6 @@ private[sources] class GraftStreamingWrite(dir: String,
     }
     ManagedTable.enforceConstraintsOnFiles(spark, dir, newFiles,
       s"streaming epoch $epochId")
-    val (headProps, headSchema) = ManagedTable.headContext(spark, dir)
-    val newStats = ManagedTable.segmentStats(spark, dir, newFiles,
-      headProps, headSchema)
     var attempt = 0
     var done = false
     while (!done) {
@@ -3102,34 +3096,52 @@ private[sources] class GraftStreamingWrite(dir: String,
   }
 
   override def abort(epochId: Long,
-      messages: Array[WriterCommitMessage]): Unit = {
-    val conf = SparkSession.active.sessionState.newHadoopConf()
-    messages.foreach {
-      case GraftWriteCommit(fs) => fs.foreach { rel =>
-        val p = new HPath(s"$dir/$rel")
-        try { p.getFileSystem(conf).delete(p, false); () }
-        catch { case _: Exception => () }
-      }
-      case _ => ()
-    }
-  }
+      messages: Array[WriterCommitMessage]): Unit =
+    GraftWriteCommit.deleteStaged(dir, messages)
 }
 
-private[sources] class GraftStreamingWriterFactory(dir: String,
-    segment: String, schemaJson: String,
-    confSer: org.apache.spark.util.SerializableConfiguration = null)
+private[sources] class GraftStreamingWriterFactory(segment: String,
+    stats: WriteStats)
     extends org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long,
       epochId: Long)
       : org.apache.spark.sql.connector.write.DataWriter[InternalRow] =
-    new GraftDataWriter(dir, s"$segment/e$epochId",
-      DataType.fromJson(schemaJson).asInstanceOf[StructType],
-      partitionId, taskId,
-      if (confSer != null) confSer.value else new Configuration())
+    new GraftDataWriter(s"$segment/e$epochId", stats, partitionId, taskId)
 }
 
-private[sources] final case class GraftWriteCommit(relFiles: Seq[String])
-    extends org.apache.spark.sql.connector.write.WriterCommitMessage
+/** One task's commit message: the manifest stats of each file it
+  * staged (none for an empty partition), keyed by segment-relative path.
+  */
+private[sources] final case class GraftWriteCommit(
+    stats: ManagedTable.FileStats)
+    extends org.apache.spark.sql.connector.write.WriterCommitMessage {
+  def relFiles: Seq[String] = stats.keys.toSeq.sorted
+}
+
+private[sources] object GraftWriteCommit {
+  /** The staged files of a write's messages, with their stats. */
+  def stats(messages: Array[org.apache.spark.sql.connector.write
+      .WriterCommitMessage]): ManagedTable.FileStats =
+    messages.iterator.collect { case c: GraftWriteCommit => c.stats }
+      .foldLeft(Map.empty: ManagedTable.FileStats)(_ ++ _)
+
+  /** Best-effort delete of a write's staged files and their Bloom
+    * sidecars (an aborted write, or a replayed epoch's dead copy).
+    */
+  def deleteStaged(dir: String, messages: Array[org.apache.spark.sql
+      .connector.write.WriterCommitMessage]): Unit = {
+    val conf = SparkSession.active.sessionState.newHadoopConf()
+    stats(messages).foreach { case (rel, st) =>
+      val sidecars = st.collect {
+        case (k, (side, _)) if k.startsWith(BloomSkipping.StatPrefix) => side }
+      (rel +: sidecars.toSeq).foreach { f =>
+        val p = new HPath(s"$dir/$f")
+        try { p.getFileSystem(conf).delete(p, false); () }
+        catch { case _: Exception => () }
+      }
+    }
+  }
+}
 
 private[sources] class GraftBatchWrite(dir: String, schema: StructType,
     truncateFirst: Boolean,
@@ -3146,21 +3158,18 @@ private[sources] class GraftBatchWrite(dir: String, schema: StructType,
   // schema); resolved on the driver, shipped to executors as json
   override def createBatchWriterFactory(info: PhysicalWriteInfo)
       : DataWriterFactory =
-    new GraftWriterFactory(dir, segment,
-      GraftBatchWrite.writerSchema(dir, schema, truncateFirst).json,
-      GraftDvReader.sessionConfSer())
+    new GraftWriterFactory(segment,
+      GraftBatchWrite.writeStats(dir, schema, truncateFirst))
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val spark = SparkSession.active
-    val newFiles = messages.flatMap {
-      case GraftWriteCommit(fs) => fs
-      case _ => Nil
-    }.toSeq.sorted
+    val newStats = GraftWriteCommit.stats(messages)
+    val newFiles = newStats.keys.toSeq.sorted
     replaceCond.foreach { cond =>
-      ManagedTable.replaceStaged(spark, dir, cond, newFiles, schema)
+      ManagedTable.replaceStaged(spark, dir, cond, newStats, schema)
       return
     }
-    val (headProps, headSchema) = ManagedTable.headContext(spark, dir)
+    val headProps = ManagedTable.tableProperties(spark, dir)
     // constraints survive a truncate ([[ManagedTable
     // .carryLedgerForSchema]]) — enforce them on the overwrite rows
     // too; the staged files carry the QUERY schema on an overwrite
@@ -3174,8 +3183,6 @@ private[sources] class GraftBatchWrite(dir: String, schema: StructType,
     } else
       ManagedTable.enforceConstraintsOnFiles(spark, dir, newFiles,
         "INSERT INTO")
-    val newStats = ManagedTable.segmentStats(spark, dir, newFiles,
-      headProps, if (truncateFirst) Some(schema) else headSchema)
     // optimistic create-fails-if-exists loop, same discipline as the
     // DataFrame writers: losing a version race re-reads the head and
     // re-commits on top of it (the staged files never move)
@@ -3212,20 +3219,24 @@ private[sources] class GraftBatchWrite(dir: String, schema: StructType,
     }
   }
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val conf = SparkSession.active.sessionState.newHadoopConf()
-    messages.foreach {
-      case GraftWriteCommit(fs) => fs.foreach { rel =>
-        val p = new HPath(s"$dir/$rel")
-        try { p.getFileSystem(conf).delete(p, false); () }
-        catch { case _: Exception => () }
-      }
-      case _ => ()
-    }
-  }
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    GraftWriteCommit.deleteStaged(dir, messages)
 }
 
 private[sources] object GraftBatchWrite {
+  /** The stats fold of a staged connector write: over the
+    * [[writerSchema]], with the Bloom columns the head declares mapped
+    * through the schema being committed (the query schema on a
+    * truncate, the head's otherwise).
+    */
+  def writeStats(dir: String, query: StructType,
+      truncateFirst: Boolean): WriteStats = {
+    val spark = SparkSession.active
+    val (props, head) = ManagedTable.headContext(spark, dir)
+    WriteStats(spark, dir, writerSchema(dir, query, truncateFirst), props,
+      if (truncateFirst) Some(query) else head)
+  }
+
   /** Parquet-facing schema for a staged connector write: the query
     * schema translated to the table's PHYSICAL column names when
     * appending to a mapped table; the query schema verbatim for a
@@ -3361,26 +3372,23 @@ private[sources] class GraftCowBatchWrite(dir: String,
   // the rewrite stages files under the table's PHYSICAL column names
   // (the operation's resolved snapshot carries the mapping)
   override def createBatchWriterFactory(info: PhysicalWriteInfo)
-      : DataWriterFactory =
-    new GraftWriterFactory(dir, segment,
+      : DataWriterFactory = {
+    val spark = SparkSession.active
+    val (props, head) = ManagedTable.headContext(spark, dir)
+    new GraftWriterFactory(segment, WriteStats(spark, dir,
       resolvedAt().map(rm => ColumnMapping.physicalFor(schema, rm.schema))
-        .getOrElse(schema).json,
-      GraftDvReader.sessionConfSer())
+        .getOrElse(schema), props, head))
+  }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val spark = SparkSession.active
-    val staged = messages.flatMap {
-      case GraftWriteCommit(fs) => fs
-      case _ => Nil
-    }.toSeq.sorted
+    val newStats = GraftWriteCommit.stats(messages)
+    val staged = newStats.keys.toSeq.sorted
     val removed = scanned().toSet
     if (staged.isEmpty && removed.isEmpty) return // matched nothing
     // an UPDATE/MERGE may not rewrite rows INTO violation
     ManagedTable.enforceConstraintsOnFiles(spark, dir, staged,
       "row-level operation")
-    val (headProps, headSchema) = ManagedTable.headContext(spark, dir)
-    val newStats = ManagedTable.segmentStats(spark, dir, staged,
-      headProps, headSchema)
     var attempt = 0
     var done = false
     while (!done) {
@@ -3441,43 +3449,34 @@ private[sources] class GraftCowBatchWrite(dir: String,
     }
   }
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val conf = SparkSession.active.sessionState.newHadoopConf()
-    messages.foreach {
-      case GraftWriteCommit(fs) => fs.foreach { rel =>
-        val p = new HPath(s"$dir/$rel")
-        try { p.getFileSystem(conf).delete(p, false); () }
-        catch { case _: Exception => () }
-      }
-      case _ => ()
-    }
-  }
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    GraftWriteCommit.deleteStaged(dir, messages)
 }
 
-private[sources] class GraftWriterFactory(dir: String, segment: String,
-    schemaJson: String,
-    confSer: org.apache.spark.util.SerializableConfiguration = null)
+private[sources] class GraftWriterFactory(segment: String,
+    stats: WriteStats)
     extends org.apache.spark.sql.connector.write.DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long)
       : org.apache.spark.sql.connector.write.DataWriter[InternalRow] =
-    new GraftDataWriter(dir, segment,
-      DataType.fromJson(schemaJson).asInstanceOf[StructType],
-      partitionId, taskId,
-      if (confSer != null) confSer.value else new Configuration())
+    new GraftDataWriter(segment, stats, partitionId, taskId)
 }
 
 /** One task's parquet file, created lazily on the first row (an empty
-  * partition contributes no file, matching Spark's own writers).
+  * partition contributes no file, matching Spark's own writers). The
+  * file's manifest stats fold as its rows are written ([[WriteStats]]).
   */
-private[sources] class GraftDataWriter(dir: String, segment: String,
-    schema: StructType, partitionId: Int, taskId: Long,
-    conf: Configuration = new Configuration())
+private[sources] class GraftDataWriter(segment: String, stats: WriteStats,
+    partitionId: Int, taskId: Long)
     extends org.apache.spark.sql.connector.write.DataWriter[InternalRow] {
   import org.apache.parquet.example.data.simple.SimpleGroupFactory
   import org.apache.parquet.io.api.Binary
 
-  private val rel =
-    f"$segment/part-$partitionId%05d-$taskId.snappy.parquet"
+  private val dir = stats.dir
+  private val schema = stats.schema
+  private val conf = stats.conf.value
+  private val name = f"part-$partitionId%05d-$taskId.snappy.parquet"
+  private val rel = s"$segment/$name"
+  private val fold = stats.fold(segment)
   private val messageType = GraftParquetSchema.fromSpark(schema)
   private val factory = new SimpleGroupFactory(messageType)
   private var writer
@@ -3495,6 +3494,7 @@ private[sources] class GraftDataWriter(dir: String, segment: String,
 
   override def write(row: InternalRow): Unit = {
     if (writer == null) open()
+    fold.add(row)
     val g = factory.newGroup()
     var i = 0
     while (i < schema.length) {
@@ -3550,8 +3550,11 @@ private[sources] class GraftDataWriter(dir: String, segment: String,
 
   override def commit()
       : org.apache.spark.sql.connector.write.WriterCommitMessage = {
-    if (writer != null) writer.close()
-    GraftWriteCommit(if (writer != null) Seq(rel) else Nil)
+    if (writer == null) GraftWriteCommit(Map.empty)
+    else {
+      writer.close()
+      GraftWriteCommit(Map(rel -> fold.finish(name)))
+    }
   }
 
   override def abort(): Unit = {

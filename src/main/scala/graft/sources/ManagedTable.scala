@@ -193,8 +193,8 @@ object ManagedTable {
     }
 
   /** (current properties, current schema) of the table head — the
-    * context a pre-commit stats pass (bloom digest columns, mapped
-    * names) needs; empty for a not-yet-created table.
+    * context a write's stats fold (bloom digest columns, mapped names)
+    * needs; empty for a not-yet-created table.
     */
   private[sources] def headContext(spark: SparkSession, dir: String)
       : (Map[String, String],
@@ -461,422 +461,6 @@ object ManagedTable {
     out.result()
   }
 
-  /** Columns stats are kept for: orderable atomics whose recorded
-    * render round-trips exactly — numerics via BigDecimal, strings
-    * verbatim, and date/timestamp as epoch-day / epoch-micro NUMERIC
-    * strings ([[statExpr]]: no calendar text render ever touches the
-    * manifest, so there is no timezone or format hazard on either the
-    * build or the probe side). Everything else is skipped — absent
-    * stats mean "never pruned", which is always safe.
-    */
-  private def statsColumns(
-      schema: org.apache.spark.sql.types.StructType): Seq[String] =
-    schema.fields.toSeq.collect {
-      case f if f.dataType.isInstanceOf[org.apache.spark.sql.types.NumericType]
-        || f.dataType == org.apache.spark.sql.types.StringType
-        || f.dataType == org.apache.spark.sql.types.DateType
-        || f.dataType == org.apache.spark.sql.types.TimestampType => f.name
-    }
-
-  /** The expression whose min/max/digest the stats pass records for a
-    * column: the column itself, except date/timestamp which convert
-    * to their internal numerics (monotone, so min/max commute with
-    * the conversion). Probes convert their values the same way
-    * ([[GraftScan.renderStatsValue]]); runtime-filter literals arrive
-    * as these numerics natively.
-    */
-  private def statExpr(df: org.apache.spark.sql.DataFrame,
-      c: String): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions.{col, unix_date, unix_micros}
-    df.schema.fields.find(_.name == c).map(_.dataType) match {
-      case Some(org.apache.spark.sql.types.TimestampType) =>
-        unix_micros(col(c))
-      case Some(org.apache.spark.sql.types.DateType) => unix_date(col(c))
-      case _ => col(c)
-    }
-  }
-
-  /** One aggregation pass over freshly written segment files: per-file
-    * min/max for every [[statsColumns]] column, plus the file's ROW
-    * COUNT under the [[RowsStat]] pseudo-column and each stats
-    * column's NON-NULL count under [[nnStat]] (all stored as
-    * `(count, count)` so they ride the existing stats format — old
-    * manifests simply lack the entries and stats consumers that need
-    * counts fall back). One extra scan of the
-    * NEW segment only (Delta folds this into the writer; a plain
-    * parquet write can't be hooked, so the segment — just written and
-    * page-cached — is re-read once). All-null columns in a file are
-    * omitted from min/max (no stats = never pruned) but still carry
-    * their zero non-null count.
-    */
-  private[sources] def segmentStats(spark: SparkSession, dir: String,
-      relFiles: Seq[String], props: Map[String, String] = Map.empty,
-      logical: Option[org.apache.spark.sql.types.StructType] = None)
-      : FileStats = {
-    if (relFiles.isEmpty) return Map.empty
-    // FAST PATH — derive the stats from the parquet FOOTERS the write
-    // already produced instead of re-reading the segment with a Spark
-    // job (guide §1.2 "don't compute things you throw away": the old
-    // pass re-scanned every fresh segment once per commit, a full
-    // extra read of all written data plus one job of fixed scheduling
-    // cost — the dominant slice of a small streaming append). Tables
-    // declaring Bloom digest columns still need a data pass (digests
-    // are built from the values) — but a COLUMN-PRUNED one reading
-    // only the digest columns, with footers supplying the rest. Any
-    // file/column the footer can't prove exactly falls back to the
-    // full scan path, so the output contract is unchanged.
-    footerStats(spark, dir, relFiles) match {
-      case Some(st) =>
-        if (BloomSkipping.bloomColsOf(props).isEmpty) return st
-        val dg = digestStats(spark, dir, relFiles, props, logical)
-        return st.map { case (rel, kv) =>
-          rel -> (kv ++ dg.getOrElse(rel, Map.empty)) }
-      case None => ()
-    }
-    scanStats(spark, dir, relFiles, props, logical)
-  }
-
-  /** The digest half of [[scanStats]] alone — one grouped pass whose
-    * aggs reference ONLY the declared Bloom columns, so the parquet
-    * scan prunes every other column (the min/max/count half comes from
-    * [[footerStats]]). Executor-side sidecar writes and the
-    * (file → digest stat entry) shape are identical to the fused pass.
-    */
-  private def digestStats(spark: SparkSession, dir: String,
-      relFiles: Seq[String], props: Map[String, String],
-      logical: Option[org.apache.spark.sql.types.StructType])
-      : FileStats = {
-    import org.apache.spark.sql.functions.col
-    val df = spark.read.parquet(relFiles.map(p => s"$dir/$p"): _*)
-    // pseudo-column collision: same "record nothing" rule as scanStats
-    val recordRows = !df.schema.fieldNames.exists(n =>
-      n == RowsStat || n.startsWith(NnPrefix) ||
-        n.startsWith(BloomSkipping.StatPrefix))
-    if (!recordRows) return Map.empty
-    val declared = BloomSkipping.bloomColsOf(props)
-    val phys = logical match {
-      case Some(sch) => declared.filter(sch.fieldNames.contains)
-        .map(c => ColumnMapping.physOf(sch, c))
-      case None => declared
-    }
-    val bloomPhys = phys.distinct.filter(c => df.schema.fields.exists(f =>
-      f.name == c && BloomSkipping.eligible(f.dataType)))
-    if (bloomPhys.isEmpty) return Map.empty
-    val fpp = BloomSkipping.fppOf(props)
-    val aggs = bloomPhys.map(c =>
-      BloomSkipping.digestColumn(statExpr(df, c), fpp).as(s"__bf_$c"))
-    val grouped = df
-      .groupBy(col("_metadata.file_path").as("__file"))
-      .agg(aggs.head, aggs.tail: _*)
-    val fieldNames = grouped.schema.fieldNames
-    val rels = relFiles
-    val dirStr = dir
-    val serConf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sessionState.newHadoopConf())
-    grouped.rdd.map { r =>
-      val abs = r.getString(0)
-      val rel = rels.find(abs.endsWith(_)).getOrElse(abs)
-      val kv = fieldNames.zipWithIndex.drop(1).flatMap { case (n, i) =>
-        if (r.isNullAt(i)) None
-        else {
-          val c = n.stripPrefix("__bf_")
-          val sidecar = BloomSkipping.sidecarRelFor(rel, c)
-          BloomSkipping.writeSidecarBytes(s"$dirStr/$sidecar",
-            r.getAs[Array[Byte]](i), serConf.value)
-          Some((BloomSkipping.statKey(c),
-            (sidecar, BloomSkipping.Scheme)))
-        }
-      }.toMap
-      (rel, kv)
-    }.collect().toMap
-  }
-
-  /** The original stats pass: one Spark aggregation job over the fresh
-    * segment (still the path for Bloom-digest tables, and the fallback
-    * when a footer is unusable — see [[footerStats]]).
-    */
-  private[sources] def scanStats(spark: SparkSession, dir: String,
-      relFiles: Seq[String], props: Map[String, String] = Map.empty,
-      logical: Option[org.apache.spark.sql.types.StructType] = None)
-      : FileStats = {
-    import org.apache.spark.sql.functions.{col, count, lit, max, min}
-    if (relFiles.isEmpty) return Map.empty
-    val df = spark.read.parquet(relFiles.map(p => s"$dir/$p"): _*)
-    val cols = statsColumns(df.schema)
-    // a user column literally named like a pseudo-column would collide
-    // in the stats map — skip count recording for that table
-    val recordRows = !df.schema.fieldNames.exists(n =>
-      n == RowsStat || n.startsWith(NnPrefix) ||
-        n.startsWith(BloomSkipping.StatPrefix))
-    // Bloom digest columns ride the SAME grouped pass: the declared
-    // property names LOGICAL columns; files carry PHYSICAL names —
-    // translate through the schema being committed (identity for
-    // unmapped tables), keep only present + digest-eligible types
-    val bloomPhys: Seq[String] =
-      if (!recordRows) Nil
-      else {
-        val declared = BloomSkipping.bloomColsOf(props)
-        val phys = logical match {
-          case Some(sch) => declared.filter(sch.fieldNames.contains)
-            .map(c => ColumnMapping.physOf(sch, c))
-          case None => declared
-        }
-        phys.distinct.filter(c => df.schema.fields.exists(f =>
-          f.name == c && BloomSkipping.eligible(f.dataType)))
-      }
-    if (cols.isEmpty && !recordRows && bloomPhys.isEmpty) return Map.empty
-    val fpp = BloomSkipping.fppOf(props)
-    val aggs = cols.flatMap(c => Seq(
-      min(statExpr(df, c)).cast("string").as(s"__min_$c"),
-      max(statExpr(df, c)).cast("string").as(s"__max_$c")) ++
-      (if (recordRows) Seq(count(col(c)).cast("string").as(s"__nn_$c"))
-       else Nil)) ++
-      (if (recordRows) Seq(count(lit(1)).cast("string").as("__nrows"))
-       else Nil) ++
-      bloomPhys.map(c =>
-        BloomSkipping.digestColumn(statExpr(df, c), fpp).as(s"__bf_$c"))
-    val grouped = df
-      .groupBy(col("_metadata.file_path").as("__file"))
-      .agg(aggs.head, aggs.tail: _*)
-    // digest sidecars are written ON THE EXECUTORS as the grouped rows
-    // stream out — the driver collects only (file, small string cells);
-    // digest BYTES never cross the driver boundary. The SESSION's
-    // Hadoop configuration rides into the closure (serialized) so the
-    // executor-side sidecar write resolves filesystems exactly as the
-    // session would — object-store credentials and FS overrides live
-    // there, and this path is not fail-open.
-    val fieldNames = grouped.schema.fieldNames
-    val rels = relFiles
-    val dirStr = dir
-    val serConf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sessionState.newHadoopConf())
-    val collected: Array[(String, Map[String, String])] =
-      grouped.rdd.map { r =>
-        val abs = r.getString(0)
-        val rel = rels.find(abs.endsWith(_)).getOrElse(abs)
-        val kv = fieldNames.zipWithIndex.drop(1).flatMap { case (n, i) =>
-          if (r.isNullAt(i)) None
-          else if (n.startsWith("__bf_")) {
-            val c = n.stripPrefix("__bf_")
-            val sidecar = BloomSkipping.sidecarRelFor(rel, c)
-            BloomSkipping.writeSidecarBytes(s"$dirStr/$sidecar",
-              r.getAs[Array[Byte]](i), serConf.value)
-            Some((BloomSkipping.statKey(c), sidecar))
-          } else Some((n, r.getString(i)))
-        }.toMap
-        (rel, kv)
-      }.collect()
-    val nonEmpty = collected.map { case (rel, kv) =>
-      val colStats = cols.flatMap { c =>
-        for {
-          lo <- kv.get(s"__min_$c")
-          hi <- kv.get(s"__max_$c")
-        } yield c -> (lo, hi)
-      }.toMap
-      val withRows =
-        if (recordRows)
-          colStats ++
-            cols.flatMap(c =>
-              kv.get(s"__nn_$c").map(nn => nnStat(c) -> ((nn, nn)))) ++
-            kv.get("__nrows").map(n => RowsStat -> ((n, n)))
-        else colStats
-      val withBf = withRows ++ bloomPhys.flatMap(c =>
-        kv.get(BloomSkipping.statKey(c)).map(s =>
-          BloomSkipping.statKey(c) -> ((s, BloomSkipping.Scheme))))
-      rel -> withBf
-    }.toMap
-    // a file the grouped pass never saw has ZERO rows (an empty
-    // CREATE/empty-partition part file) — record that as a fact, so
-    // one empty file can't forever disqualify count-from-manifest
-    val empty = relFiles.filterNot(nonEmpty.contains).map { rel =>
-      rel -> (if (recordRows)
-                cols.map(c => nnStat(c) -> ("0", "0")).toMap +
-                  (RowsStat -> ("0", "0"))
-              else Map.empty[String, (String, String)])
-    }.toMap
-    nonEmpty ++ empty
-  }
-
-  /** Derive a fresh segment's manifest stats from its parquet FOOTERS —
-    * zero data reads, zero Spark jobs (a driver loop over O(files)
-    * footers, each a few KB and page-hot right after the write). This
-    * is Delta's model (the writer emits the stats with the file); a
-    * plain `df.write.parquet` can't be hooked, but the footer already
-    * carries exactly what the manifest records:
-    *
-    *   - min/max per column, EXACT for the whitelisted types whose
-    *     footer value IS the recorded render: integral (INT32/INT64 →
-    *     decimal string), string (BINARY/UTF8 verbatim — the footer
-    *     comparator is unsigned-lexicographic, identical to the
-    *     UTF8String order [[planFilesMulti]]/`GraftScan.cmp` compare
-    *     with), date (INT32 days = `unix_date`), timestamp
-    *     (INT64 micros, adjusted-to-UTC = `unix_micros` — why
-    *     [[writeSegment]] pins TIMESTAMP_MICROS), and decimal
-    *     (unscaled+scale → plain string; consumers parse BigDecimal);
-    *   - float/double min/max are deliberately NOT taken from footers
-    *     (parquet NaN statistics semantics differ by writer version;
-    *     absent stats only ever mean "never pruned", and MIN/MAX
-    *     pushdown already refuses float/double) — their non-null
-    *     counts still record;
-    *   - row count and per-column non-null counts from block
-    *     rowCount / numNulls.
-    *
-    * Returns None — caller falls back to the [[scanStats]] data pass —
-    * whenever exactness can't be PROVEN from the footer alone: a
-    * statistics-less chunk that isn't provably all-null (parquet-mr
-    * drops binary stats past 4 KB), an unexpected physical/logical
-    * type, mixed file schemas, a column-index-truncated endpoint
-    * (detected as a non-value by max < min re-check), or any read
-    * error. The MIN/MAX-from-manifest pushdown's "stats entry with no
-    * column entry = all-NULL file" contract is preserved exactly: a
-    * column omits its endpoints only when every chunk is provably
-    * all-null.
-    */
-  private[sources] def footerStats(spark: SparkSession, dir: String,
-      relFiles: Seq[String]): Option[FileStats] = {
-    import org.apache.parquet.schema.{LogicalTypeAnnotation => L,
-      PrimitiveType}
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-    val conf = spark.sessionState.newHadoopConf()
-    // the render for one top-level primitive column, or None when the
-    // type is outside the exact-render whitelist (caller falls back)
-    type Render = Comparable[_] => String
-    def renderOf(t: org.apache.parquet.schema.Type): Option[Option[Render]] = {
-      // Some(Some(r)) = stats column with render r; Some(None) =
-      // numeric-tier column tracked for counts only (float/double);
-      // None = not a stats column (skip entirely)
-      if (!t.isPrimitive) return None // arrays/groups: never stats
-      val p = t.asPrimitiveType()
-      val ann = p.getLogicalTypeAnnotation
-      (p.getPrimitiveTypeName, ann) match {
-        case (INT32 | INT64, null) => Some(Some(v => String.valueOf(v)))
-        case (INT32 | INT64, i: L.IntLogicalTypeAnnotation)
-            if i.isSigned => Some(Some(v => String.valueOf(v)))
-        case (BINARY, _: L.StringLogicalTypeAnnotation) =>
-          Some(Some(v => new String(
-            v.asInstanceOf[org.apache.parquet.io.api.Binary].getBytes,
-            java.nio.charset.StandardCharsets.UTF_8)))
-        case (INT32, _: L.DateLogicalTypeAnnotation) =>
-          Some(Some(v => String.valueOf(v)))
-        case (INT64, ts: L.TimestampLogicalTypeAnnotation)
-            if ts.isAdjustedToUTC &&
-              ts.getUnit == L.TimeUnit.MICROS =>
-          Some(Some(v => String.valueOf(v)))
-        case (INT32 | INT64, d: L.DecimalLogicalTypeAnnotation) =>
-          Some(Some(v => java.math.BigDecimal.valueOf(
-            v.asInstanceOf[Number].longValue, d.getScale).toPlainString))
-        case (FIXED_LEN_BYTE_ARRAY | BINARY,
-            d: L.DecimalLogicalTypeAnnotation) =>
-          Some(Some(v => new java.math.BigDecimal(
-            new java.math.BigInteger(v
-              .asInstanceOf[org.apache.parquet.io.api.Binary].getBytes),
-            d.getScale).toPlainString))
-        case (FLOAT | DOUBLE, null) => Some(None) // counts only
-        case (BOOLEAN, _) | (BINARY, null) => None // not a stats column
-        case _ =>
-          // INT96, unsigned ints, exotic annotations: a type the scan
-          // path WOULD record — refuse the fast path rather than
-          // silently dropping its stats
-          throw FooterUnusable
-      }
-    }
-    def statsOfFile(rel: String,
-        expectSchema: org.apache.parquet.schema.MessageType)
-        : (org.apache.parquet.schema.MessageType,
-           Map[String, (String, String)]) = {
-      val r = GraftDvReader.openFile(s"$dir/$rel", conf)
-      try {
-        val md = r.getFooter
-        val schema = md.getFileMetaData.getSchema
-        if (expectSchema != null && schema != expectSchema)
-          throw FooterUnusable // mixed segment schemas: scan path
-        val names = schema.getFields
-        // pseudo-column collision discipline — identical to scanStats
-        val recordRows = !(0 until names.size).exists { i =>
-          val n = names.get(i).getName
-          n == RowsStat || n.startsWith(NnPrefix) ||
-            n.startsWith(BloomSkipping.StatPrefix)
-        }
-        val blocks = md.getBlocks
-        val nRows = (0 until blocks.size)
-          .map(i => blocks.get(i).getRowCount).sum
-        val out = Map.newBuilder[String, (String, String)]
-        if (recordRows)
-          out += RowsStat -> ((nRows.toString, nRows.toString))
-        (0 until names.size).foreach { fi =>
-          val field = names.get(fi)
-          renderOf(field).foreach { render =>
-            val colPath = org.apache.parquet.hadoop.metadata.ColumnPath
-              .get(field.getName)
-            var nn = 0L
-            var mn: Comparable[_] = null
-            var mx: Comparable[_] = null
-            (0 until blocks.size).foreach { bi =>
-              val block = blocks.get(bi)
-              val chunks = block.getColumns
-              var chunk: org.apache.parquet.hadoop.metadata
-                .ColumnChunkMetaData = null
-              (0 until chunks.size).foreach { ci =>
-                if (chunks.get(ci).getPath == colPath)
-                  chunk = chunks.get(ci)
-              }
-              if (chunk == null) throw FooterUnusable
-              val st = chunk.getStatistics
-              if (st == null || st.isEmpty || !st.isNumNullsSet)
-                throw FooterUnusable
-              val chunkRows = block.getRowCount
-              nn += chunkRows - st.getNumNulls
-              if (st.hasNonNullValue) {
-                val cmp = st.comparator()
-                  .asInstanceOf[java.util.Comparator[Any]]
-                val bMin = st.genericGetMin
-                  .asInstanceOf[Comparable[_]]
-                val bMax = st.genericGetMax
-                  .asInstanceOf[Comparable[_]]
-                if (mn == null || cmp.compare(bMin, mn) < 0) mn = bMin
-                if (mx == null || cmp.compare(bMax, mx) > 0) mx = bMax
-              } else if (st.getNumNulls != chunkRows && render.isDefined)
-                // values exist but no endpoints recorded (oversized
-                // binary stats dropped at write): unprovable. Only
-                // fatal when the column needs endpoints — float/double
-                // (counts-only; parquet-mr omits min/max whenever a
-                // chunk holds a NaN) just keep their null counts.
-                throw FooterUnusable
-            }
-            if (recordRows)
-              out += nnStat(field.getName) -> ((nn.toString, nn.toString))
-            render match {
-              case Some(rd) if mn != null && mx != null =>
-                out += field.getName -> ((rd(mn), rd(mx)))
-              case _ => () // all-null column, or counts-only type
-            }
-          }
-        }
-        (schema, out.result())
-      } finally r.close()
-    }
-    try {
-      var schema0: org.apache.parquet.schema.MessageType = null
-      val b = Map.newBuilder[String, Map[String, (String, String)]]
-      relFiles.foreach { rel =>
-        val (sch, st) = statsOfFile(rel, schema0)
-        if (schema0 == null) schema0 = sch
-        b += rel -> st
-      }
-      Some(b.result())
-    } catch {
-      case FooterUnusable => None
-      case _: java.io.IOException => None
-    }
-  }
-
-  /** Control-flow sentinel of [[footerStats]]: "this footer can't
-    * prove the stats — take the scan path". Stackless, never observed
-    * outside footerStats.
-    */
-  private object FooterUnusable
-    extends RuntimeException(null, null, false, false)
-
   /** Pseudo-column key in [[FileStats]] holding the file's row count
     * (as `(n, n)`). Never a real column name ([[planFilesMulti]] only
     * looks up pushed columns, so the entry is invisible to pruning);
@@ -906,9 +490,8 @@ object ManagedTable {
   def commit(df: DataFrame, dir: String, tag: String = ""): Int = {
     val spark = df.sparkSession
     val next = versions(spark, dir).lastOption.getOrElse(0) + 1
-    val files = writeSegment(df, dir, next)
-    writeManifest(spark, dir, next, tag, files, df.schema.json,
-      segmentStats(spark, dir, files))
+    val (files, stats) = writeSegment(df, dir, next)
+    writeManifest(spark, dir, next, tag, files, df.schema.json, stats)
     next
   }
 
@@ -956,12 +539,11 @@ object ManagedTable {
     val ordered = schema.map(sch =>
       ColumnMapping.toPhysicalFrame(clustered, sch))
       .getOrElse(clustered)
-    val newData = writeSegment(ordered, dir, next)
+    val (newData, newStats) = writeSegment(ordered, dir, next,
+      propertiesOf(stats), schema)
     writeManifest(spark, dir, next, tag,
       files ++ newData ++ dvFiles.map("dv:" + _),
-      schema.map(_.json).getOrElse(df.schema.json),
-      stats ++ segmentStats(spark, dir, newData,
-        propertiesOf(stats), schema))
+      schema.map(_.json).getOrElse(df.schema.json), stats ++ newStats)
     next
   }
 
@@ -983,35 +565,34 @@ object ManagedTable {
   }
 
   /** Write `df` as version `v`'s fresh data segment; returns the
-    * segment-relative parquet paths (empty for a no-row write).
+    * segment-relative parquet paths (a no-row write leaves one empty
+    * file, as Spark's writer does) and their manifest stats.
+    *
+    * The write is Spark's own parquet writer, and each task folds its
+    * files' stats as it writes them ([[WriteStats]]): the writer
+    * reports exactly the files it committed, with their stats and Bloom
+    * sidecars, so nothing lists the segment or reads it back. `props`
+    * and `logical` (the table's properties and the schema being
+    * committed) name the Bloom digest columns.
     *
     * Timestamps are written as INT64 micros (TIMESTAMP_MICROS), never
     * Spark's INT96 default: the connector's own Group-API writer
-    * already uses the standard annotation ([[GraftParquetSchema]]),
-    * both custom readers decode it, and — unlike INT96, which parquet
-    * deprecated without statistics support — INT64 columns carry
-    * footer min/max/null-count stats, which lets [[segmentStats]]
-    * derive the manifest stats from the footers instead of re-reading
-    * the segment (set/restore around the one write; concurrent
-    * writers racing the conf both set the same value).
+    * already uses the standard annotation ([[GraftParquetSchema]]) and
+    * both custom readers decode it. The type is set in this write's
+    * own job conf; the session conf is left as it is.
     */
-  private def writeSegment(df: DataFrame, dir: String, v: Int): Seq[String] = {
+  private def writeSegment(df: DataFrame, dir: String, v: Int,
+      props: Map[String, String] = Map.empty,
+      logical: Option[org.apache.spark.sql.types.StructType] = None)
+      : (Seq[String], FileStats) = {
     val segment = s"data/v$v-${java.util.UUID.randomUUID()}"
-    val sess = df.sparkSession
-    val tsKey = "spark.sql.parquet.outputTimestampType"
-    val prevTs = sess.conf.getOption(tsKey)
-    sess.conf.set(tsKey, "TIMESTAMP_MICROS")
-    try df.write.mode("error").parquet(s"$dir/$segment")
-    finally prevTs match {
-      case Some(p) => sess.conf.set(tsKey, p)
-      case None => sess.conf.unset(tsKey)
-    }
-    val f = fs(df.sparkSession, dir)
-    f.listStatus(new Path(s"$dir/$segment")).toSeq
-      .map(_.getPath.getName)
-      .filter(_.endsWith(".parquet"))
-      .sorted
-      .map(n => s"$segment/$n")
+    val spec = WriteStats(df.sparkSession, dir, df.schema, props, logical)
+    val written = org.apache.spark.sql.graftshim.FileWriteBridge.writeParquet(
+      df, s"$dir/$segment",
+      Map("spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS"),
+      () => spec.fold(segment))
+    val stats = written.map { case (name, st) => s"$segment/$name" -> st }
+    (stats.map(_._1).sorted, stats.toMap)
   }
 
   /** Atomically claim version `v` with an explicit file list — the
@@ -1346,7 +927,7 @@ object ManagedTable {
       }).cache()
     try {
       if (union.isEmpty) Seq.empty
-      else writeSegment(union.coalesce(1), dir, next)
+      else writeSegment(union.coalesce(1), dir, next)._1
     } finally { union.unpersist(); () }
   }
 
@@ -1407,7 +988,7 @@ object ManagedTable {
       val next = current + 1
       // one small file: the DV is deleted-rows-sized by construction (at
       // real scale you'd bin per data file; the read side is identical)
-      val dvSeg = writeSegment(union.coalesce(1), dir, next)
+      val dvSeg = writeSegment(union.coalesce(1), dir, next)._1
       writeManifest(spark, dir, next, tag,
         files ++ dvSeg.map("dv:" + _), schema.json, stats)
       next
@@ -1473,10 +1054,10 @@ object ManagedTable {
     // the same reason. A constraint failure deletes the orphan segment
     // before throwing (a crash between write and manifest leaves the
     // same unreferenced files [[vacuum]] already handles).
-    val newDataAll = writeSegment(
+    val (newDataAll, writtenStats) = writeSegment(
       ColumnMapping.toPhysicalFrame(
         replacement.select(schema.fieldNames.map(col): _*), schema),
-      dir, next)
+      dir, next, propertiesOf(stats), Some(schema))
     val written =
       if (newDataAll.isEmpty) spark.emptyDataFrame
       else relogical(scanFiles(spark, dir, newDataAll,
@@ -1499,25 +1080,25 @@ object ManagedTable {
     if (!writtenEmpty)
       try enforceConstraints(written, propertiesOf(stats), "replaceWhere")
       catch { case e: Throwable => dropSegments(); throw e }
-    val newData =
-      if (!writtenEmpty) newDataAll
+    val (newData, newStats) =
+      if (!writtenEmpty) (newDataAll, writtenStats)
       else { // empty replacement degrades to a delete: drop the empty segment
-        dropSegments(); Seq.empty }
+        dropSegments(); (Seq.empty, Map.empty: FileStats) }
     // tombstone the live rows the predicate selects (deleteWhere's
     // scan, zone-map pruned the same way)
     val dvSeg = tombstoneSegment(spark, dir, files, stats, schema,
       dvFiles, predicate, next)
     writeManifest(spark, dir, next, tag,
       files ++ newData ++ dvSeg.map("dv:" + _), schema.json,
-      stats ++ segmentStats(spark, dir, newData,
-        propertiesOf(stats), Some(schema)))
+      stats ++ newStats)
     next
   }
 
   /** The commit side of [[replaceWhere]] over PRE-STAGED segment files
     * — the DSv2 write path's twin (`INSERT INTO … REPLACE WHERE` /
     * `DataFrameWriterV2.overwrite(cond)`): executors have already
-    * streamed the replacement rows into `newFiles`; this checks the
+    * streamed the replacement rows into the `staged` files (their
+    * stats came back with the write); this checks the
     * replaceWhere constraint on those exact files (every written row
     * must satisfy the predicate — same idempotent-backfill rationale
     * as [[replaceWhere]], and here the staged files ARE the written
@@ -1529,33 +1110,31 @@ object ManagedTable {
     * [[vacuum]]. Returns the committed version.
     */
   private[sources] def replaceStaged(spark: SparkSession, dir: String,
-      predicate: org.apache.spark.sql.Column, newFiles: Seq[String],
+      predicate: org.apache.spark.sql.Column, staged: FileStats,
       writeSchema: org.apache.spark.sql.types.StructType): Int = {
     import org.apache.spark.sql.functions.{coalesce, lit}
-    require(versions(spark, dir).nonEmpty,
-      s"graft: REPLACE WHERE needs an existing table at $dir")
+    val newFiles = staged.keys.toSeq.sorted
+    val vs = versions(spark, dir)
+    require(vs.nonEmpty, s"graft: REPLACE WHERE needs an existing table at $dir")
+    var current = vs.last
+    var head = readManifest(spark, dir, current)
     if (newFiles.nonEmpty) {
       // staged files carry PHYSICAL names (the executor writers used
       // the table's mapping); the predicate speaks logical
-      val headSchema = readManifest(spark, dir, versions(spark, dir).last)
-        ._3.map(schemaOf).getOrElse(writeSchema)
+      val headSchema = head._3.map(schemaOf).getOrElse(writeSchema)
       val written = relogical(scanFiles(spark, dir, newFiles,
         ColumnMapping.physSchema(headSchema)), headSchema)
       require(written.filter(!coalesce(predicate, lit(false))).isEmpty,
         "graft: every REPLACE WHERE row must satisfy the predicate " +
           "(Delta's replaceWhere constraint — it is what makes the " +
           "backfill idempotent)")
+      enforceConstraints(written, propertiesOf(head._4), "REPLACE WHERE")
     }
-    enforceConstraintsOnFiles(spark, dir, newFiles, "REPLACE WHERE")
-    val head = readManifest(spark, dir, versions(spark, dir).last)
-    val newStats = segmentStats(spark, dir, newFiles,
-      propertiesOf(head._4), head._3.map(schemaOf).orElse(Some(writeSchema)))
     var attempt = 0
     while (true) {
       attempt += 1
-      val current = versions(spark, dir).last
       val next = current + 1
-      val (_, all, schemaJson, stats) = readManifest(spark, dir, current)
+      val (_, all, schemaJson, stats) = head
       val (files, dvFiles) = splitDv(all)
       val schema = schemaJson.map(schemaOf).getOrElse(writeSchema)
       // zone-map pruned like [[replaceWhere]]: open only files whose
@@ -1565,7 +1144,7 @@ object ManagedTable {
       try {
         writeManifest(spark, dir, next, tag = "",
           files ++ newFiles ++ dvSeg.map("dv:" + _), schema.json,
-          stats ++ newStats)
+          stats ++ staged)
         return next
       } catch {
         case e: Exception =>
@@ -1573,6 +1152,8 @@ object ManagedTable {
           // (the stale dvSeg stays unreferenced — vacuum's job)
           if (!(attempt < 5 && versions(spark, dir).lastOption
               .exists(_ >= next))) throw e
+          current = versions(spark, dir).last
+          head = readManifest(spark, dir, current)
       }
     }
     -1 // unreachable
@@ -2282,19 +1863,18 @@ object ManagedTable {
       else ColumnMapping.evolve(tableSchema, merged.schema,
         retiredPhysical(currentStats), next)
     enforceConstraints(merged, propertiesOf(currentStats), "merge")
-    val newFiles = writeSegment(
-      ColumnMapping.toPhysicalFrame(merged, mergedSchema), dir, next)
+    val (newFiles, newStats) = writeSegment(
+      ColumnMapping.toPhysicalFrame(merged, mergedSchema), dir, next,
+      propertiesOf(currentStats), Some(mergedSchema))
     // untouched files keep their recorded stats (and their DV entries —
     // tombstones naming rewritten files match nothing and age out);
-    // only the fresh segment is scanned for new ones
+    // the fresh segment brings its own from the write
     writeManifest(spark, dir, next, tag,
       untouched ++ newFiles ++
         (if (untouched.isEmpty) Nil else currentDv.map("dv:" + _)),
       mergedSchema.json,
       currentStats.view.filterKeys(untouched.contains).toMap ++
-        tableStats(currentStats) ++
-        segmentStats(spark, dir, newFiles,
-          propertiesOf(currentStats), Some(mergedSchema)))
+        tableStats(currentStats) ++ newStats)
     next
   }
 
@@ -2506,7 +2086,7 @@ object ManagedTable {
     // whose deletion-vector tombstones cover at least that fraction of
     // its recorded rows joins the rewrite set — materializing its
     // deletes into real bytes and REBUILDING its Bloom digests from
-    // the survivors (the stats pass below digests the packed segment).
+    // the survivors (the write below digests the packed segment).
     // This is what keeps digests honest on hot deleteWhere tables:
     // digests are built at commit and a heavily-tombstoned file's
     // digest stays full of dead values (fail-open, so correct — but
@@ -2579,8 +2159,9 @@ object ManagedTable {
       if (effectiveCluster.isEmpty) packed0.coalesce(outFiles)
       else packed0.repartitionByRange(outFiles, effectiveCluster: _*)
         .sortWithinPartitions(effectiveCluster: _*)
-    val newFiles = writeSegment(
-      ColumnMapping.toPhysicalFrame(packed, schema), dir, next)
+    val (newFiles, newStats) = writeSegment(
+      ColumnMapping.toPhysicalFrame(packed, schema), dir, next,
+      propertiesOf(stats), Some(schema))
     // the DV reference is carried forward ONLY while some KEPT file
     // still has tombstones — rewritten files materialized theirs, so
     // once no kept file is tombstoned the DV is dropped and `detail`
@@ -2593,9 +2174,7 @@ object ManagedTable {
         (if (keepsTombstones) dvFiles.map("dv:" + _) else Nil),
       schema.json,
       stats.view.filterKeys(keep.contains).toMap ++
-        tableStats(stats) ++
-        segmentStats(spark, dir, newFiles,
-          propertiesOf(stats), Some(schema)))
+        tableStats(stats) ++ newStats)
     next
   }
 

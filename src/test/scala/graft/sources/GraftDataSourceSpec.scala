@@ -450,8 +450,9 @@ class GraftDataSourceSpec extends SparkSpec {
         : org.apache.spark.sql.connector.write.WriterCommitMessage = {
       // task ids are unique per attempt in a real run — model that
       nextTid += 1
-      val writer = new GraftStreamingWriterFactory(dir,
-        s"data/w-test$epoch", schema.json).createWriter(0, nextTid, epoch)
+      val writer = new GraftStreamingWriterFactory(s"data/w-test$epoch",
+        WriteStats(spark, dir, schema, Map.empty[String, String], None))
+        .createWriter(0, nextTid, epoch)
       rows.foreach { case (k, s0) =>
         writer.write(org.apache.spark.sql.catalyst.InternalRow(k,
           org.apache.spark.unsafe.types.UTF8String.fromString(s0)))

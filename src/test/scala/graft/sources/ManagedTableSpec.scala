@@ -246,6 +246,27 @@ class ManagedTableSpec extends SparkSpec {
       .toMap + (10L -> ("changed", 2L)) - 40L))
   }
 
+  test("an append to a Bloom-digested table runs 1 Spark job: the write folds the digests") {
+    import spark.implicits._
+    val (dir, _) = tableOfFiles("graft-mt-bfjobs", Seq(Seq((1L, "a", 1L))))
+    ManagedTable.setTableProperties(spark, dir,
+      Map(BloomSkipping.ColumnsProp -> "k,p"))
+    val rows = (0L until 100L).map(k => (k, s"p$k", 1L)).toDF("k", "p", "seq")
+    val jobs = jobsDuring { ManagedTable.appendCommit(rows, dir); () }
+    assert(jobs == 1, s"digested append ran $jobs jobs")
+    val (_, files, _, stats) = ManagedTable.readManifest(spark, dir, 3)
+    assert(files.filterNot(filesOf(dir, 2).contains)
+      .forall(f => stats(f).contains(BloomSkipping.statKey("k"))))
+  }
+
+  test("an append to a plain table runs 1 Spark job") {
+    import spark.implicits._
+    val (dir, _) = tableOfFiles("graft-mt-appendjobs", Seq(Seq((1L, "a", 1L))))
+    val rows = (0L until 100L).map(k => (k, s"p$k", 1L)).toDF("k", "p", "seq")
+    val jobs = jobsDuring { ManagedTable.appendCommit(rows, dir); () }
+    assert(jobs == 1, s"plain append ran $jobs jobs")
+  }
+
   test("data skipping: range reads plan only stats-matching files; results equal the unpruned filter") {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft-mt9").toString
